@@ -3,9 +3,10 @@ fetch, and per-provider response parsers.
 
 Parity map (reference → here):
 - http_client.cpp:61-106 ExtractHttpSettings → HttpSettings /
-  extract_http_settings (timeout, keep-alive, proxy + basic auth,
-  user-agent, cache toggle — read from ``spark.sudan.http.*`` conf
-  keys instead of DuckDB settings/secrets).
+  extract_http_settings (timeout, proxy + basic auth, user-agent,
+  cache toggle — read from the ``spark.sudan.http.*`` conf keys listed
+  there instead of DuckDB settings/secrets; the api.sudan_* functions
+  pass the session's conf).
 - wb_functions.cpp:110-210 FetchWorldBankData → fetch_worldbank_pages
   (page loop over `pages` metadata, date=START:END filter).
 - who_functions.cpp:107-205 FetchWHOData → fetch_who / parse_who.
@@ -28,7 +29,7 @@ any failure and callers fall back to the offline samples.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from duckdb_sudan__spark.providers.cache import ResponseCache
 from duckdb_sudan__spark.providers.pushdown import (
@@ -40,7 +41,6 @@ from duckdb_sudan__spark.providers.pushdown import (
 )
 
 DEFAULT_TIMEOUT = 90
-DEFAULT_MAX_CONCURRENCY = 8
 DEFAULT_USER_AGENT = "duckdb_sudan__spark/0.2"
 
 
@@ -49,15 +49,11 @@ class HttpSettings:
     """HTTP client configuration (http_client.cpp:61-106)."""
 
     timeout: int = DEFAULT_TIMEOUT
-    keep_alive: bool = True
-    max_concurrency: int = DEFAULT_MAX_CONCURRENCY
-    follow_redirects: bool = True
     use_cache: bool = True
     user_agent: str = DEFAULT_USER_AGENT
     proxy: str = ""
     proxy_username: str = ""
     proxy_password: str = ""
-    extra_headers: dict = field(default_factory=dict)
 
 
 _CONF_PREFIX = "spark.sudan.http."
@@ -70,9 +66,6 @@ def extract_http_settings(conf=None) -> HttpSettings:
     (http_client.cpp:61-106). Recognized keys (all optional)::
 
         spark.sudan.http.timeout            seconds, default 90
-        spark.sudan.http.keepAlive          true/false
-        spark.sudan.http.maxConcurrency     int
-        spark.sudan.http.followRedirects    true/false
         spark.sudan.http.requestCache       true/false
         spark.sudan.http.userAgent          string
         spark.sudan.http.proxy              host:port
@@ -97,9 +90,6 @@ def extract_http_settings(conf=None) -> HttpSettings:
 
     return HttpSettings(
         timeout=int(get("timeout", str(DEFAULT_TIMEOUT))),
-        keep_alive=as_bool(get("keepAlive", "true")),
-        max_concurrency=int(get("maxConcurrency", str(DEFAULT_MAX_CONCURRENCY))),
-        follow_redirects=as_bool(get("followRedirects", "true")),
         use_cache=as_bool(get("requestCache", "true")),
         user_agent=get("userAgent", DEFAULT_USER_AGENT),
         proxy=get("proxy", ""),
@@ -115,7 +105,8 @@ def extract_http_settings(conf=None) -> HttpSettings:
 # scheme+host per provider. Production values are the reference's public
 # API hosts; tests point entries at an in-process loopback http.server to
 # drive the real socket path (urllib opener, redirects, timeouts) with no
-# network.
+# network. Every builder and fetcher also takes `base`, a per-call
+# override of this table (the DataSource's `base_url` option).
 PROVIDER_BASES = {
     "worldbank": "https://api.worldbank.org",
     "who": "https://ghoapi.azureedge.net",
@@ -125,19 +116,21 @@ PROVIDER_BASES = {
 }
 
 
-def build_worldbank_url(indicator: str, iso3: str, yf: YearFilter, page: int = 1) -> str:
+def build_worldbank_url(
+    indicator: str, iso3: str, yf: YearFilter, page: int = 1, base: str | None = None
+) -> str:
     # wb_functions.cpp:113-126
     url = (
-        f"{PROVIDER_BASES['worldbank']}/v2/country/{iso3}/indicator/{indicator}"
+        f"{base or PROVIDER_BASES['worldbank']}/v2/country/{iso3}/indicator/{indicator}"
         f"?format=json&per_page=1000&page={page}"
     )
     year_param = encode_worldbank(yf)
     return f"{url}&{year_param}" if year_param else url
 
 
-def build_who_url(indicator: str, iso3: str, yf: YearFilter) -> str:
+def build_who_url(indicator: str, iso3: str, yf: YearFilter, base: str | None = None) -> str:
     # who_functions.cpp:110-112; year range merged into the OData $filter
-    url = f"{PROVIDER_BASES['who']}/api/{indicator}?$filter=SpatialDim eq '{iso3}'"
+    url = f"{base or PROVIDER_BASES['who']}/api/{indicator}?$filter=SpatialDim eq '{iso3}'"
     year_param = encode_who(yf)
     if year_param:
         url += " and " + year_param.removeprefix("$filter=")
@@ -155,22 +148,22 @@ def fao_area_code(iso3: str) -> str:
     return FAO_AREA_CODES.get(iso3, iso3)
 
 
-def build_fao_url(dataset: str, iso3: str) -> str:
+def build_fao_url(dataset: str, iso3: str, base: str | None = None) -> str:
     """fao_functions.cpp:210-216: FAOSTAT caps limit at ~500 and has no
     offset pagination; `element` is NOT a URL parameter — it's matched
     client-side against the Element field (partial, case-insensitive)."""
     return (
-        f"{PROVIDER_BASES['fao']}/api/v1/en/data/{dataset}"
+        f"{base or PROVIDER_BASES['fao']}/api/v1/en/data/{dataset}"
         f"?area={fao_area_code(iso3)}&output_type=objects&limit=500"
     )
 
 
-def build_unhcr_url(param_name: str, iso3: str, yf: YearFilter) -> str:
+def build_unhcr_url(param_name: str, iso3: str, yf: YearFilter, base: str | None = None) -> str:
     """unhcr_functions.cpp:237-243: always the unified /population/
     endpoint; cf_type=iso makes the API accept ISO3 codes; param_name
     is 'coo' (origin) or 'coa' (asylum) — callers fetch BOTH. The
     population type selects a response FIELD, not a path segment."""
-    url = f"{PROVIDER_BASES['unhcr']}/population/v1/population/?limit=10000&cf_type=iso&{param_name}={iso3}"
+    url = f"{base or PROVIDER_BASES['unhcr']}/population/v1/population/?limit=10000&cf_type=iso&{param_name}={iso3}"
     year_param = encode_unhcr(yf)
     return f"{url}&{year_param}" if year_param else url
 
@@ -178,19 +171,19 @@ def build_unhcr_url(param_name: str, iso3: str, yf: YearFilter) -> str:
 ILO_KEY_SUFFIXES = (".", "..", "...", "....", ".....")
 
 
-def build_ilo_urls(indicator: str, iso3: str, yf: YearFilter) -> list[str]:
+def build_ilo_urls(indicator: str, iso3: str, yf: YearFilter, base: str | None = None) -> list[str]:
     """ilo_functions.cpp:107-122: dataflow DF_ prefix only when absent
     (catalog IDs already carry it); SDMX key is REF_AREA first then
     'A' (Annual); dimension count varies per indicator so each
     wildcard suffix ('.' … '.....') yields a candidate URL to try in
     order until one succeeds."""
     dataflow = indicator if indicator.startswith("DF_") else f"DF_{indicator}"
-    base = f"{PROVIDER_BASES['ilo']}/rest/data/ILO,{dataflow}/{iso3}.A"
+    prefix = f"{base or PROVIDER_BASES['ilo']}/rest/data/ILO,{dataflow}/{iso3}.A"
     suffix = "?format=jsondata&detail=dataonly&lastNObservations=20"
     year_param = encode_ilo(yf)
     if year_param:
         suffix += "&" + year_param
-    return [base + ks + suffix for ks in ILO_KEY_SUFFIXES]
+    return [prefix + ks + suffix for ks in ILO_KEY_SUFFIXES]
 
 
 # ---------------------------------------------------------------------------
@@ -223,9 +216,7 @@ def http_get_json(url: str, settings: HttpSettings | None = None) -> dict | list
                     mgr.add_password(None, proxy, s.proxy_username, s.proxy_password)
                     handlers.append(HTTPBasicAuthHandler(mgr))
             opener = build_opener(*handlers)
-            headers = {"User-Agent": s.user_agent, **s.extra_headers}
-            if s.keep_alive:
-                headers.setdefault("Connection", "keep-alive")
+            headers = {"User-Agent": s.user_agent}
             # the WHO OData $filter carries literal spaces (reference URL
             # shape, who_functions.cpp:110-112) — a raw space in the
             # request line is malformed HTTP and real servers 400 it, so
@@ -282,14 +273,14 @@ def parse_worldbank_page(doc, rows: list[tuple]) -> int:
 
 
 def fetch_worldbank_pages(
-    indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None
+    indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None, base: str | None = None
 ) -> list[tuple]:
     """All pages for one (indicator, country) — the reference's
     FetchWorldBankData loop (wb_functions.cpp:110-210)."""
     rows: list[tuple] = []
     page, total_pages = 1, 1
     while page <= total_pages:
-        doc = http_get_json(build_worldbank_url(indicator, iso3, yf, page), settings)
+        doc = http_get_json(build_worldbank_url(indicator, iso3, yf, page, base), settings)
         got = parse_worldbank_page(doc, rows)
         if got == 0:
             break
@@ -351,8 +342,10 @@ def parse_who(doc, indicator: str, iso3: str) -> list[tuple]:
     return rows
 
 
-def fetch_who(indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None) -> list[tuple]:
-    return parse_who(http_get_json(build_who_url(indicator, iso3, yf), settings), indicator, iso3)
+def fetch_who(
+    indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None, base: str | None = None
+) -> list[tuple]:
+    return parse_who(http_get_json(build_who_url(indicator, iso3, yf, base), settings), indicator, iso3)
 
 
 # ---------------------------------------------------------------------------
@@ -395,9 +388,14 @@ def parse_fao(doc, element: str, dataset: str) -> list[tuple]:
 
 
 def fetch_fao(
-    dataset: str, element: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None
+    dataset: str,
+    element: str,
+    iso3: str,
+    yf: YearFilter,
+    settings: HttpSettings | None = None,
+    base: str | None = None,
 ) -> list[tuple]:
-    rows = parse_fao(http_get_json(build_fao_url(dataset, iso3), settings), element, dataset)
+    rows = parse_fao(http_get_json(build_fao_url(dataset, iso3, base), settings), element, dataset)
     # FAOSTAT has no year URL params the API honors — filter client-side
     return [r for r in rows if yf.contains(r[4])] if yf.active else rows
 
@@ -412,6 +410,7 @@ UNHCR_FIELD_NAMES = {
     "idps": "idps", "idp": "idps",
     "asylum_seekers": "asylum_seekers", "asylum": "asylum_seekers",
     "returned_refugees": "returned_refugees", "returned": "returned_refugees",
+    "returnees": "returned_refugees",
     "stateless": "stateless",
 }
 
@@ -465,14 +464,15 @@ def parse_unhcr(doc, field_name: str) -> list[tuple]:
 
 
 def fetch_unhcr(
-    population_type: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None
+    population_type: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None, base: str | None = None
 ) -> list[tuple]:
     """One fetch per param in {coo, coa} — the country appears on both
     the origin and asylum side (unhcr_functions.cpp:228-244)."""
     field_name = unhcr_field_name(population_type)
     rows: list[tuple] = []
     for param_name in ("coo", "coa"):
-        rows.extend(parse_unhcr(http_get_json(build_unhcr_url(param_name, iso3, yf), settings), field_name))
+        url = build_unhcr_url(param_name, iso3, yf, base)
+        rows.extend(parse_unhcr(http_get_json(url, settings), field_name))
     return rows
 
 
@@ -560,10 +560,12 @@ def parse_ilo_sdmx(doc, indicator: str, iso3: str) -> list[tuple]:
     return rows
 
 
-def fetch_ilo(indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None) -> list[tuple]:
+def fetch_ilo(
+    indicator: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None, base: str | None = None
+) -> list[tuple]:
     """Try each wildcard key suffix until a fetch succeeds
     (ilo_functions.cpp:124-142)."""
-    for url in build_ilo_urls(indicator, iso3, yf):
+    for url in build_ilo_urls(indicator, iso3, yf, base):
         doc = http_get_json(url, settings)
         if doc is not None:
             rows = parse_ilo_sdmx(doc, indicator, iso3)

@@ -26,7 +26,6 @@ class Provider:
     name_ar: str
     description: str
     base_url: str
-    country_param: str
 
 
 # Sudan + neighbors — reference providers.hpp:29-40
@@ -49,7 +48,6 @@ PROVIDERS: tuple[Provider, ...] = (
         "البنك الدولي",
         "World Development Indicators and other World Bank datasets",
         "https://api.worldbank.org/v2/",
-        "SDN",
     ),
     Provider(
         "who",
@@ -57,7 +55,6 @@ PROVIDERS: tuple[Provider, ...] = (
         "منظمة الصحة العالمية",
         "Global Health Observatory (GHO) data",
         "https://ghoapi.azureedge.net/api/",
-        "SDN",
     ),
     Provider(
         "fao",
@@ -65,7 +62,6 @@ PROVIDERS: tuple[Provider, ...] = (
         "منظمة الأغذية والزراعة",
         "FAOSTAT agricultural statistics",
         "https://faostatservices.fao.org/api/v1/",
-        "276",
     ),
     Provider(
         "unhcr",
@@ -73,7 +69,6 @@ PROVIDERS: tuple[Provider, ...] = (
         "المفوضية السامية",
         "UN Refugee Agency displacement and population data",
         "https://api.unhcr.org/population/v1/",
-        "SDN",
     ),
     Provider(
         "ilo",
@@ -81,7 +76,6 @@ PROVIDERS: tuple[Provider, ...] = (
         "منظمة العمل الدولية",
         "International Labour Organization statistics",
         "https://sdmx.ilo.org/rest/",
-        "SDN",
     ),
 )
 

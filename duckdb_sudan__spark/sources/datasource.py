@@ -7,10 +7,13 @@ on its own executor — the 3-phase Bind/Init/Execute model of the
 reference (wb_functions.cpp:44-280) maps to
 schema()/partitions()/read(partition).
 
-Bind-phase validation happens on the DRIVER in `SudanReader.__init__`
-(provider name, required parameters, country codes), raising the same
-"SUDAN: ..." messages as the api functions — mirroring the reference's
-Bind errors instead of a raw executor-side KeyError.
+Each provider is declared once, in providers/api.py's TABLE_FUNCTIONS;
+this module holds no per-provider table. `SudanDataSource.schema()`
+reads the provider's schema from it, and `SudanReader.__init__` runs
+the same `api.bind` as the api functions (provider name, required
+parameters with their option defaults, country codes), raising the
+same "SUDAN: ..." messages — the reference's Bind errors instead of a
+raw executor-side KeyError.
 
 Year-range pushdown is driven by the DataSource filter-pushdown API:
 `SudanReader.pushFilters` absorbs year >=/>/<=/</== predicates from
@@ -21,9 +24,15 @@ Catalyst to evaluate. Explicit `year_start`/`year_end` options are
 still honored and combined (intersection) with pushed filters.
 
 Offline mode (default: `offline=true`) serves the deterministic
-embedded samples; `offline=false` runs the per-country fetch loops in
-providers/http.py on the EXECUTOR that owns the country partition,
-falling back to that country's samples when the fetch yields nothing.
+embedded samples; `offline=false` runs the per-country fetch
+(`api.rows`) on the EXECUTOR that owns the country partition, falling
+back to that country's samples when the fetch yields nothing. The
+optional `base_url` option replaces the scheme+host of every provider
+URL for that read only.
+
+The reader runs in Python worker processes, which have no session
+conf: live reads here use the default HttpSettings, not the
+``spark.sudan.http.*`` keys the api functions honour.
 """
 
 from __future__ import annotations
@@ -42,60 +51,10 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.types import StructType
 
-from duckdb_sudan__spark.providers import http, samples
+from duckdb_sudan__spark.providers import api
 from duckdb_sudan__spark.providers.pushdown import YearFilter
-from duckdb_sudan__spark.providers.registry import resolve_countries, validate_country_codes
-
-# provider → (sample row builder taking (opts, countries), year column index)
-_PROVIDER_META = {
-    "worldbank": (lambda opts, cs: samples.worldbank_rows(opts["indicator"], cs), 4),
-    "who": (lambda opts, cs: samples.who_rows(opts["indicator"], cs), 3),
-    "fao": (lambda opts, cs: samples.fao_rows(opts["dataset"], opts["element"], cs), 4),
-    "unhcr": (lambda opts, cs: samples.unhcr_rows(opts["population_type"], cs), 0),
-    "ilo": (lambda opts, cs: samples.ilo_rows(opts["indicator"], cs), 4),
-}
-
-# provider → live fetch for ONE country (reference Init loops)
-_PROVIDER_FETCH = {
-    "worldbank": lambda opts, iso3, yf, st: http.fetch_worldbank_pages(opts["indicator"], iso3, yf, st),
-    "who": lambda opts, iso3, yf, st: http.fetch_who(opts["indicator"], iso3, yf, st),
-    "fao": lambda opts, iso3, yf, st: http.fetch_fao(opts["dataset"], opts["element"], iso3, yf, st),
-    "unhcr": lambda opts, iso3, yf, st: http.fetch_unhcr(opts["population_type"], iso3, yf, st),
-    "ilo": lambda opts, iso3, yf, st: http.fetch_ilo(opts["indicator"], iso3, yf, st),
-}
-
-# provider → required string options checked at bind time (reference
-# Bind functions; fao defaults mirror the api test surface)
-_REQUIRED_OPTIONS = {
-    "worldbank": ("indicator",),
-    "who": ("indicator",),
-    "fao": ("dataset", "element"),
-    "unhcr": ("population_type",),
-    "ilo": ("indicator",),
-}
-
-_OPTION_DEFAULTS = {
-    "fao": {"dataset": "QCL", "element": "production"},
-    "unhcr": {"population_type": "refugees"},
-}
-
-_PROVIDER_DDL = {
-    "worldbank": (
-        "indicator_id string, indicator_name string, country string, "
-        "country_name string, year int, value double"
-    ),
-    "who": (
-        "indicator_code string, indicator_name string, country string, "
-        "year int, sex string, value double, region string"
-    ),
-    "fao": "dataset string, area string, item string, element string, year int, value double, unit string",
-    "unhcr": (
-        "year int, population_type string, country_origin string, country_origin_name string, "
-        "country_asylum string, country_asylum_name string, value bigint"
-    ),
-    "ilo": "indicator string, country string, sex string, classif1 string, year int, value double",
-}
 
 _YEAR_COLUMN = ("year",)
 
@@ -107,36 +66,14 @@ class _CountryPartition(InputPartition):
 
 class SudanReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.options = dict(options)
-        self.provider = self.options.get("provider", "worldbank")
-        if self.provider not in _PROVIDER_META:
-            raise ValueError(
-                f"SUDAN: Unknown provider '{self.provider}'. Valid: {', '.join(sorted(_PROVIDER_META))}."
-            )
-        for key, default in _OPTION_DEFAULTS.get(self.provider, {}).items():
-            self.options.setdefault(key, default)
-        # bind-phase validation on the driver — same messages as api.py
-        for key in _REQUIRED_OPTIONS[self.provider]:
-            if not self.options.get(key):
-                raise ValueError(f"SUDAN: The {key} parameter cannot be empty.")
-        if self.provider == "unhcr":
-            ptype = self.options["population_type"]
-            if ptype not in samples.UNHCR_POPULATION_TYPES:
-                raise ValueError(
-                    f"SUDAN: Invalid population_type '{ptype}'. "
-                    f"Valid: {', '.join(samples.UNHCR_POPULATION_TYPES)}."
-                )
-        countries = self.options.get("countries")
-        requested = countries.split(",") if countries else None
-        if requested and not validate_country_codes(requested):
-            raise ValueError(
-                "SUDAN: Invalid country code. Supported: SDN, EGY, ETH, TCD, SSD, ERI, LBY, CAF (ISO2 also accepted)."
-            )
-        self.countries = resolve_countries(requested)
-        self.offline = str(self.options.get("offline", "true")).lower() != "false"
-        self.year_filter = YearFilter(
-            int(self.options.get("year_start", 0)), int(self.options.get("year_end", 0))
-        )
+        options = dict(options)
+        self.provider = options.get("provider", "worldbank")
+        countries = options.get("countries")
+        # bind-phase validation on the driver — the api functions' bind
+        self.params, self.countries = api.bind(self.provider, options, countries.split(",") if countries else None)
+        self.offline = str(options.get("offline", "true")).lower() != "false"
+        self.base_url = options.get("base_url") or None
+        self.year_filter = YearFilter(int(options.get("year_start", 0)), int(options.get("year_end", 0)))
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Absorb year-range predicates from the WHERE clause; every
@@ -192,23 +129,11 @@ class SudanReader(DataSourceReader):
         return [_CountryPartition(c) for c in self.countries]
 
     def read(self, partition: _CountryPartition) -> Iterator[tuple]:
-        build, year_idx = _PROVIDER_META[self.provider]
-        rows: list[tuple] = []
-        if not self.offline:
-            # optional scheme+host override (mirror, corporate proxy,
-            # loopback test server). read() runs in a Python worker
-            # process, so the module-global must be set HERE, not on the
-            # driver — driver-side mutation never reaches the worker.
-            base_url = self.options.get("base_url", "")
-            if base_url:
-                for k in http.PROVIDER_BASES:
-                    http.PROVIDER_BASES[k] = base_url
-            rows = _PROVIDER_FETCH[self.provider](self.options, partition.iso3, self.year_filter, None)
-        if not rows:
-            rows = build(self.options, [partition.iso3])
-        if self.year_filter.active:
-            rows = [r for r in rows if self.year_filter.contains(r[year_idx])]
-        yield from rows
+        # base_url travels with the reader, not through the module-level
+        # PROVIDER_BASES: Python workers are reused across reads
+        yield from api.rows(
+            self.provider, self.params, partition.iso3, self.year_filter, self.offline, base=self.base_url
+        )
 
 
 class SudanStreamReader(SimpleDataSourceStreamReader):
@@ -218,7 +143,9 @@ class SudanStreamReader(SimpleDataSourceStreamReader):
     APIs (a production deployment polls for newly published years; the
     offline form replays the embedded sample's year sequence
     deterministically, which is what the rows-only driver entry and
-    the batch-equivalence test pin).
+    the batch-equivalence test pin). With `offline=false` the rows come
+    from the same per-country live fetch as the batch reader, taken
+    once when the stream is planned.
 
     Offset = {"y": <index into the sorted year list>} — a restart from
     a checkpoint resumes at the first unemitted year. `read(start)`
@@ -231,16 +158,11 @@ class SudanStreamReader(SimpleDataSourceStreamReader):
     reference's Bind error at plan time."""
 
     def __init__(self, options: dict):
-        # reuse the batch reader's bind validation + sample assembly
-        self._bound = SudanReader(dict(options))
+        # the batch reader's bind and per-country rows, offline or live
+        bound = SudanReader(options)
         self._per_batch = int(options.get("years_per_batch", 0) or 0)
-        build, year_idx = _PROVIDER_META[self._bound.provider]
-        rows = []
-        for iso3 in self._bound.countries:
-            rows.extend(build(self._bound.options, [iso3]))
-        if self._bound.year_filter.active:
-            rows = [r for r in rows if self._bound.year_filter.contains(r[year_idx])]
-        self._year_idx = year_idx
+        year_idx = api.TABLE_FUNCTIONS[bound.provider].year_idx
+        rows = [r for iso3 in bound.countries for r in bound.read(_CountryPartition(iso3))]
         self._years = sorted({r[year_idx] for r in rows})
         self._by_year = {y: [r for r in rows if r[year_idx] == y] for y in self._years}
 
@@ -266,13 +188,8 @@ class SudanDataSource(DataSource):
     def name(cls) -> str:
         return "sudan"
 
-    def schema(self) -> str:
-        provider = self.options.get("provider", "worldbank")
-        if provider not in _PROVIDER_DDL:
-            raise ValueError(
-                f"SUDAN: Unknown provider '{provider}'. Valid: {', '.join(sorted(_PROVIDER_DDL))}."
-            )
-        return _PROVIDER_DDL[provider]
+    def schema(self) -> StructType:
+        return api.table_function(self.options.get("provider", "worldbank")).schema
 
     def reader(self, schema) -> SudanReader:
         return SudanReader(self.options)

@@ -129,7 +129,9 @@ def test_r15_window_plan_is_valid():
     live r14 window (a rotation, not a repeat), led by exactly the
     entries NO committed driver CORRECTNESS file (r14 included, once it
     lands) will have hashed — the r14 wave — then the oldest stale
-    classes oldest-first (machine-derived, not hand-claimed)."""
+    classes oldest-first (machine-derived, not hand-claimed). The r15
+    plan's execution is history too: pinned against the driver's
+    CORRECTNESS_r15.json the way the r14 test pins r14."""
     import glob
     import json
 
@@ -139,6 +141,10 @@ def test_r15_window_plan_is_valid():
     oracles = E.oracle_sql()
     queries = E.queries()
     assert E._WINDOW_PRIORITY == plan, "r15 window differs from the committed plan"
+    got = json.load(open("CORRECTNESS_r15.json"))
+    assert list(got) == plan, "driver did not execute the committed r15 plan verbatim"
+    bad = [k for k, v in got.items() if not (v["rows_match"] and v["hash_match"])]
+    assert not bad, f"r15 driver rows not green: {bad}"
     assert len(plan) == 50 and len(set(plan)) == 50
     missing_q = [k for k in plan if k not in queries]
     missing_o = [k for k in plan if k not in oracles]
@@ -152,6 +158,8 @@ def test_r15_window_plan_is_valid():
     latest: dict[str, int] = {}
     for path in glob.glob("CORRECTNESS_r*.json"):
         rnd = int(path.split("_r")[1].split(".")[0])
+        if rnd >= 15:
+            continue  # r15's own JSON landed after the plan froze
         for k in json.load(open(path)):
             latest[k] = max(latest.get(k, 0), rnd)
     for k in E._R14_WINDOW_PLAN:

@@ -246,6 +246,25 @@ def test_reader_bind_validation():
         SudanReader({"provider": "nope"})
 
 
+def test_reader_base_url_does_not_leak_into_later_reads(monkeypatch):
+    """`base_url` repoints one read only: Spark reuses Python workers, so
+    a later offline=false read without it must use the default hosts."""
+    seen = []
+
+    def fake(url, settings=None):
+        seen.append(url)
+        return None  # every fetch fails → sample fallback, no network
+
+    monkeypatch.setattr(http, "http_get_json", fake)
+    opts = {"provider": "worldbank", "indicator": "SP.POP.TOTL", "countries": "SDN", "offline": "false"}
+    first = list(SudanReader({**opts, "base_url": "http://127.0.0.1:9"}).read(_CountryPartition("SDN")))
+    n_first = len(seen)
+    second = list(SudanReader(opts).read(_CountryPartition("SDN")))
+    assert first == second == samples.worldbank_rows("SP.POP.TOTL", ["SDN"])
+    assert n_first and all(u.startswith("http://127.0.0.1:9/") for u in seen[:n_first])
+    assert seen[n_first:] and all(u.startswith("https://api.worldbank.org/") for u in seen[n_first:])
+
+
 def test_push_filters_absorbs_year_range():
     r = SudanReader({"provider": "ilo", "indicator": "UNE_DEAP_SEX_AGE_RT"})
     other = EqualTo(("country",), "SD")

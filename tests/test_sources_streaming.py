@@ -3,6 +3,7 @@
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_sudan__spark.providers import api
@@ -20,18 +21,34 @@ from duckdb_sudan__spark.streaming.events import run_stream_to_memory
 from tests.conftest import SF_DIR
 
 
-def test_datasource_worldbank_matches_api(spark):
+# provider → its DataSource options; the api takes the same values positionally
+_PARITY_OPTIONS = {
+    "worldbank": {"indicator": "SP.POP.TOTL"},
+    "who": {"indicator": "MDG_0000000026"},
+    "fao": {"dataset": "QCL", "element": "production"},
+    "unhcr": {"population_type": "refugees"},
+    "ilo": {"indicator": "UNE_DEAP_SEX_AGE_RT"},
+}
+
+
+@pytest.mark.parametrize("provider", list(_PARITY_OPTIONS))
+def test_datasource_matches_api(spark, provider):
+    """The DataSource (WHERE year >= pushed into the reader) and the api
+    function (explicit YearFilter) return the same schema and rows."""
     register_sudan_datasource(spark)
+    opts = _PARITY_OPTIONS[provider]
     ds = (
         spark.read.format("sudan")
-        .option("provider", "worldbank")
-        .option("indicator", "SP.POP.TOTL")
+        .option("provider", provider)
+        .options(**opts)
         .option("countries", "SDN,EGY")
         .load()
+        .where(F.col("year") >= 2015)
     )
-    fn = api.sudan_worldbank(spark, "SP.POP.TOTL", ["SDN", "EGY"])
+    fn = getattr(api, f"sudan_{provider}")(spark, *opts.values(), ["SDN", "EGY"], YearFilter(2015))
     assert ds.schema == fn.schema
-    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, fn.collect()))
+    got = sorted(map(tuple, ds.collect()))
+    assert got and got == sorted(map(tuple, fn.collect()))
 
 
 def test_datasource_partitions_per_country(spark):

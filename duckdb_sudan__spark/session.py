@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -87,18 +89,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) generation
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if not isinstance(ts_type, T.TimestampType):  # TIMESTAMP_NTZ generation
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return align_events_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
+
+
+def align_events_ts(events: DataFrame) -> DataFrame:
+    """Align a batch or streaming `events` relation's `ts` to the
+    session-TZ TIMESTAMP, whichever on-disk generation it was read
+    from (see load_table)."""
+    ts_type = events.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) generation
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if not isinstance(ts_type, T.TimestampType):  # TIMESTAMP_NTZ generation
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

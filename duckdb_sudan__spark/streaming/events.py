@@ -22,6 +22,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from duckdb_sudan__spark.session import align_events_ts
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -38,7 +42,7 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based stream of events; ts converted to session-TZ
-    timestamp the same way as the batch loader (session.load_table),
+    timestamp by the batch loader's own session.align_events_ts,
     handling both on-disk generations (TIMESTAMP(NANOS)-as-long and
     TIMESTAMP(MICROS)/NTZ)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -48,16 +52,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if staged
         else T.TimestampNTZType()
     )
-    stream = (
+    return align_events_ts(
         spark.readStream.schema(_events_schema(disk_type))
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)
     )
-    if isinstance(disk_type, T.LongType):
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if not isinstance(disk_type, T.TimestampType):
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def tumbling_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -169,80 +168,6 @@ def bitmap_distinct_stream(events: DataFrame, watermark: str = "1 hour") -> Data
         )
         .select(F.col("win.start").alias("window_start"), "event_type", "bucket", "mask")
     )
-
-
-def run_stream_to_memory(spark: SparkSession, sf_dir: str, which: str = "tumbling") -> DataFrame:
-    """Drive a stream to completion against the static events file and
-    return the result as a DataFrame (used by tests and the
-    `queries()` rows-only entries)."""
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "events")
-        os.makedirs(src)
-        os.link(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
-        events = events_stream(spark, src)
-        if which == "tumbling":
-            out, mode = tumbling_counts_stream(events), "complete"
-        elif which == "time_bucket":
-            out, mode = time_bucket_stream(events), "complete"
-        elif which == "sessionize":
-            out, mode = sessionize_stream(events), "complete"
-        elif which == "hll_rollup":
-            out, mode = hll_rollup_stream(events), "complete"
-        elif which == "bitmap_distinct":  # exact mergeable-bitmap rollup
-            out, mode = bitmap_distinct_stream(events), "complete"
-        elif which == "funnel":  # stateful append-mode operator
-            out, mode = funnel_stream(events), "append"
-        elif which == "funnel_windowed":  # attribution-window funnel
-            out, mode = funnel_windowed_stream(events), "append"
-        elif which == "funnel_tws":  # transformWithStateInPandas tier
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            out, mode = funnel_tws_stream(events), "append"
-        elif which == "sessionize_tws":  # transformWithStateInPandas tier
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            out, mode = sessionize_tws_stream(events), "append"
-        elif which == "event_gaps":  # stateful per-key lag (CDC delta shape)
-            out, mode = event_gaps_stream(events), "append"
-        elif which == "new_vs_returning":  # per-user first-seen classifier
-            out, mode = new_vs_returning_stream(events), "append"
-        elif which == "growth_accounting":  # per-user weekly growth classifier
-            out, mode = growth_accounting_stream(events), "append"
-        elif which == "weekly_streaks":  # per-user consecutive-week streaks
-            out, mode = weekly_streaks_stream(events), "append"
-        elif which == "weekly_streaks_tws":  # typed-state streak tier
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-            out, mode = weekly_streaks_tws_stream(events), "append"
-        elif which == "interval_union":  # per-user merge-intervals sweep
-            out, mode = interval_union_stream(events), "append"
-        elif which == "lifetime":  # per-user lifetime tracker (update mode)
-            out, mode = lifetime_stream(events), "update"
-        elif which == "attribution":  # stream-stream interval self-join
-            out, mode = attribution_join_stream(events), "append"
-        elif which == "scd2":  # stateful SCD2 dimension build
-            out, mode = scd2_stream(events), "append"
-        elif which == "attribution_outer":  # left-outer interval join
-            _write_attribution_sentinels(spark, src)
-            out, mode = attribution_outer_join_stream(events), "append"
-        else:  # dedup — watermarked drop-duplicates
-            out, mode = dedup_stream(events), "append"
-        name = f"stream_{which}_result"
-        q = out.writeStream.format("memory").queryName(name).outputMode(mode).trigger(availableNow=True).start()
-        # fail LOUD on a truncated drain (same contract as the 4
-        # foreachBatch drain sites, r12 review): an ignored False here
-        # would silently compare a partial drain against the batch twin
-        if not q.awaitTermination(120):
-            q.stop()
-            raise RuntimeError(f"stream_{which} drain exceeded 120 s")
-        q.stop()
-        return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -1538,3 +1463,81 @@ def basket_pairs_stream(order_brands: DataFrame) -> DataFrame:
         "append",
         GroupStateTimeout.NoTimeout,
     )
+
+
+# ---------------------------------------------------------------------------
+# The one drain path: every stream in this package runs through drain()
+# ---------------------------------------------------------------------------
+
+
+def drain(writer: DataStreamWriter, name: str, checkpoint: str, timeout_s: int = 120) -> None:
+    """Run `writer` to completion as an availableNow query that owns
+    its `checkpoint` directory. A drain still running after timeout_s
+    raises instead of returning partial output (a truncated drain would
+    otherwise be compared against its batch twin); the query is stopped
+    either way."""
+    q = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise RuntimeError(f"{name} drain exceeded {timeout_s} s")
+    finally:
+        q.stop()
+
+
+_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+# name -> (builder over the events stream, output mode, needs RocksDB).
+# The transformWithStateInPandas tier requires the RocksDB state store.
+STREAMS = {
+    "tumbling": (tumbling_counts_stream, "complete", False),
+    "time_bucket": (time_bucket_stream, "complete", False),
+    "sessionize": (sessionize_stream, "complete", False),
+    "hll_rollup": (hll_rollup_stream, "complete", False),
+    "bitmap_distinct": (bitmap_distinct_stream, "complete", False),
+    "funnel": (funnel_stream, "append", False),
+    "funnel_windowed": (funnel_windowed_stream, "append", False),
+    "funnel_tws": (funnel_tws_stream, "append", True),
+    "sessionize_tws": (sessionize_tws_stream, "append", True),
+    "event_gaps": (event_gaps_stream, "append", False),
+    "new_vs_returning": (new_vs_returning_stream, "append", False),
+    "growth_accounting": (growth_accounting_stream, "append", False),
+    "weekly_streaks": (weekly_streaks_stream, "append", False),
+    "weekly_streaks_tws": (weekly_streaks_tws_stream, "append", True),
+    "interval_union": (interval_union_stream, "append", False),
+    "lifetime": (lifetime_stream, "update", False),
+    "attribution": (attribution_join_stream, "append", False),
+    "scd2": (scd2_stream, "append", False),
+    "attribution_outer": (attribution_outer_join_stream, "append", False),
+    "dedup": (dedup_stream, "append", False),
+}
+
+
+def run_stream_to_memory(spark: SparkSession, sf_dir: str, which: str = "tumbling") -> DataFrame:
+    """Drive the events stream `which` to completion against the static
+    events file and return the result as a DataFrame (used by tests and
+    the `queries()` rows-only entries). Valid names are the keys of
+    STREAMS; an unknown name raises KeyError. An entry that needs
+    RocksDB gets that state-store provider for its drain only: the
+    session's previous provider is restored after every drain."""
+    build, mode, rocksdb = STREAMS[which]
+    with tempfile.TemporaryDirectory() as tmp:
+        src = os.path.join(tmp, "events")
+        os.makedirs(src)
+        os.link(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
+        events = events_stream(spark, src)
+        if build is attribution_outer_join_stream:
+            _write_attribution_sentinels(spark, src)
+        name = f"stream_{which}_result"
+        writer = build(events).writeStream.format("memory").queryName(name).outputMode(mode)
+        prev = spark.conf.get(_STATE_PROVIDER, None)
+        if rocksdb:
+            spark.conf.set(_STATE_PROVIDER, _ROCKSDB)
+        try:
+            drain(writer, f"stream_{which}", os.path.join(tmp, "ckpt"))
+        finally:
+            if prev is None:
+                spark.conf.unset(_STATE_PROVIDER)
+            else:
+                spark.conf.set(_STATE_PROVIDER, prev)
+        return spark.table(name)

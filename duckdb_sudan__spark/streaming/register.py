@@ -3,11 +3,14 @@ driver runs them as batch-completing streams (availableNow trigger)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.streaming.events import run_stream_to_memory
+from duckdb_sudan__spark.streaming.events import basket_pairs_stream, drain, run_stream_to_memory
 
 
 @register("stream_tumbling")  # rows-only: streaming sink, not SQL-comparable
@@ -95,7 +98,7 @@ def stream_sudan_worldbank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_sudan__spark.sources.datasource import register_sudan_datasource
 
     register_sudan_datasource(spark)
-    q = (
+    writer = (
         spark.readStream.format("sudan")
         .option("provider", "worldbank")
         .option("indicator", "SP.POP.TOTL")
@@ -104,13 +107,9 @@ def stream_sudan_worldbank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("memory")
         .queryName("stream_sudan_wb_result")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(120):  # fail loud on a truncated drain
-        q.stop()
-        raise RuntimeError("stream_sudan_worldbank drain exceeded 120 s")
-    q.stop()
+    with tempfile.TemporaryDirectory() as tmp:
+        drain(writer, "stream_sudan_worldbank", os.path.join(tmp, "ckpt"))
     return spark.table("stream_sudan_wb_result")
 
 
@@ -187,9 +186,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     this regime qualifier in tests/test_sources_streaming.py). A crash
     between delta write and manifest commit is replay-safe
     (crash-window test)."""
-    import os
-    import tempfile
-
     from duckdb_sudan__spark.operators import dedup
     from duckdb_sudan__spark.session import load_table
 
@@ -201,21 +197,17 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = os.path.join(tmp, "shard_docs")
         shard.repartition(4).write.parquet(src)
         pairs_dir = os.path.join(tmp, "pairs")
-        q = (
+        drain(
             spark.readStream.schema(shard.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .writeStream.foreachBatch(
                 dedup.incremental_dedup_foreach_batch(index_dir, pairs_dir)
-            )
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "stream_dedup_incremental",
+            os.path.join(tmp, "ckpt"),
+            timeout_s=300,
         )
-        if not q.awaitTermination(300):  # fail loud on a truncated drain
-            q.stop()
-            raise RuntimeError("stream_dedup_incremental drain exceeded 300 s")
-        q.stop()
         # Detach from the TemporaryDirectory with an executor-side Spark
         # write to the kept scratch root (stage+rename+fingerprint), not
         # a driver collect — the drained pair relation never visits the
@@ -281,9 +273,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests/test_sources_streaming.py) — the strongest
     equivalence a streaming twin can have, because no state-expiry
     timing is involved at all."""
-    import os
-    import tempfile
-
     from duckdb_sudan__spark.operators.text5 import _qc_score_sum_expr
     from duckdb_sudan__spark.session import load_table
 
@@ -310,18 +299,12 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sink = os.path.join(tmp, "gate_sink")
-        q = (
-            scored.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        drain(
+            scored.writeStream.format("parquet").option("path", sink).outputMode("append"),
+            "stream_quality_gate",
+            os.path.join(tmp, "ckpt"),
+            timeout_s=300,
         )
-        if not q.awaitTermination(300):  # fail loud on a truncated drain
-            q.stop()
-            raise RuntimeError("drain exceeded 300 s")
-        q.stop()
         # Parquet sink (not memory — the memory sink materializes on the
         # driver by construction), detached from the TemporaryDirectory
         # by an executor-side staged write to the kept scratch root
@@ -427,12 +410,7 @@ def stream_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced in STREAM_EQUIV.md). Scale: state is one short string per
     open order; production evicts on order closure — see
     events.basket_pairs_stream."""
-    import os
-    import tempfile
-
     from duckdb_sudan__spark.session import load_table
-    from duckdb_sudan__spark.streaming.events import basket_pairs_stream
-
     from duckdb_sudan__spark.streaming.sinks import _persist_result
 
     li_src = os.path.join(sf_dir, "lineitem.parquet")
@@ -470,19 +448,12 @@ def stream_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(partials, f"b{bid}"))
             )
 
-        q = (
-            basket_pairs_stream(stream)
-            .writeStream.foreachBatch(_agg_batch)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            basket_pairs_stream(stream).writeStream.foreachBatch(_agg_batch),
+            "stream_basket_pairs",
+            os.path.join(tmp, "ckpt"),
+            timeout_s=300,
         )
-        # fail LOUD on a truncated drain (r12 review: an ignored False
-        # return + unconditional stop() silently ships partial counts)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("stream_basket_pairs drain exceeded 300 s")
-        q.stop()
         # r12 advice: an empty source yields zero micro-batch output, so
         # no parquet was ever written — return the declared-schema empty
         # result instead of a PATH_NOT_FOUND from the readback.

@@ -31,11 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.streaming.events import events_stream
-
-
-
-from duckdb_sudan__spark.sources.files import sf_cache_key
+from duckdb_sudan__spark.sources.files import _swap_staging, sf_cache_key
+from duckdb_sudan__spark.streaming.events import drain, events_stream
 
 _SINK_ROOT = "/root/repo/tmp/sinks"
 
@@ -64,11 +61,7 @@ def _persist_result(df: DataFrame, sf_dir: str, name: str, fingerprint: str,
     with open(os.path.join(staging, "_sink_ok"), "w") as fh:
         fh.write(fingerprint)
     shutil.rmtree(final, ignore_errors=True)
-    try:
-        os.rename(staging, final)
-    except OSError:
-        # concurrent same-sf build won the rename; content-equivalent
-        shutil.rmtree(staging, ignore_errors=True)
+    _swap_staging(staging, final, marker, fingerprint)
     return final
 
 
@@ -215,17 +208,11 @@ def stream_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(src)
         _link_or_copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
         target = os.path.join(tmp, "latest_by_user")
-        q = (
-            events_stream(spark, src)
-            .writeStream.foreachBatch(upsert_foreach_batch(target))
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            events_stream(spark, src).writeStream.foreachBatch(upsert_foreach_batch(target)),
+            "stream_sink_upsert",
+            os.path.join(tmp, "ckpt"),
         )
-        if not q.awaitTermination(120):  # loud truncated-drain contract
-            q.stop()
-            raise RuntimeError("stream_sink_upsert drain exceeded 120 s")
-        q.stop()
         # persist executor-side before the TemporaryDirectory vanishes
         # (a Spark write, not a driver collect — see _persist_result)
         fp = f"v1:{os.path.getmtime(os.path.join(sf_dir, 'events.parquet'))}"
@@ -243,19 +230,14 @@ def stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(src)
         _link_or_copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
         out_dir = os.path.join(tmp, "by_type")
-        q = (
+        drain(
             events_stream(spark, src)
             .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .partitionBy("event_type")
-            .trigger(availableNow=True)
-            .start()
+            .partitionBy("event_type"),
+            "stream_sink_partitioned",
+            os.path.join(tmp, "ckpt"),
         )
-        if not q.awaitTermination(120):  # loud truncated-drain contract
-            q.stop()
-            raise RuntimeError("stream_sink_partitioned drain exceeded 120 s")
-        q.stop()
         # persist the partitioned tree executor-side, keeping the
         # event_type layout so the count below is a partition-pruned read
         fp = f"v1:{os.path.getmtime(os.path.join(sf_dir, 'events.parquet'))}"

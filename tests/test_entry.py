@@ -21,13 +21,19 @@ def test_every_oracle_key_has_query():
     assert set(ALL_ORACLES) <= set(ALL_QUERIES)
 
 
+_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
 @pytest.mark.parametrize("key", sorted(ALL_QUERIES))
 def test_query_contract(spark, duck, key):
+    provider = spark.conf.get(_STATE_PROVIDER)
     df = ALL_QUERIES[key](spark, SF_DIR)
     if key in ALL_ORACLES:
         assert_matches_oracle(df, duck, ALL_ORACLES[key])
     else:
         assert df.collect() is not None
+    # hermetic: no entry leaves its state-store provider on the session
+    assert spark.conf.get(_STATE_PROVIDER) == provider
 
 
 def test_correctness_window_is_full_and_oracled():

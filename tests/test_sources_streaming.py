@@ -189,6 +189,9 @@ def test_stream_dedup_matches_distinct(spark, duck):
     n = QUERIES["stream_dedup"](spark, SF_DIR).count()
     exact = duck.sql("SELECT COUNT(DISTINCT event_id) FROM events").fetchone()[0]
     assert n == exact
+    # an unknown stream name fails instead of falling back to dedup
+    with pytest.raises(KeyError):
+        run_stream_to_memory(spark, SF_DIR, "nope")
 
 
 def test_funnel_tws_matches_applyinpandas_and_batch(spark):
@@ -472,6 +475,59 @@ def test_link_or_copy_falls_back_on_oserror(monkeypatch):
         dst = os.path.join(tmp, "b.bin")
         sinks._link_or_copy(src, dst)
         assert open(dst, "rb").read() == b"xyz"
+
+
+def test_persist_result_raises_on_failed_rename(spark, tmp_path, monkeypatch):
+    """A failed staging->final rename must raise, not return a final
+    path that does not exist (the rename failure is benign only when a
+    same-fingerprint build already landed final)."""
+    from duckdb_sudan__spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "_SINK_ROOT", str(tmp_path))
+
+    def boom(*a, **k):
+        raise OSError(16, "Device or resource busy")
+
+    monkeypatch.setattr(os, "rename", boom)
+    with pytest.raises(OSError):
+        sinks._persist_result(spark.range(1), SF_DIR, "one_row", "fp-1")
+
+
+def test_drain_stops_a_truncated_query_and_raises():
+    """drain() owns the checkpoint and the availableNow trigger, and a
+    query still running at the timeout is stopped and reported."""
+    from duckdb_sudan__spark.streaming.events import drain
+
+    calls = []
+
+    class Query:
+        def awaitTermination(self, timeout):
+            calls.append(("await", timeout))
+            return False
+
+        def stop(self):
+            calls.append(("stop",))
+
+    class Writer:
+        def option(self, key, value):
+            calls.append((key, value))
+            return self
+
+        def trigger(self, **kw):
+            calls.append(("trigger", kw))
+            return self
+
+        def start(self):
+            return Query()
+
+    with pytest.raises(RuntimeError, match="stream_x drain exceeded 7 s"):
+        drain(Writer(), "stream_x", "/ckpt", timeout_s=7)
+    assert calls == [
+        ("checkpointLocation", "/ckpt"),
+        ("trigger", {"availableNow": True}),
+        ("await", 7),
+        ("stop",),
+    ]
 
 
 def test_stream_time_bucket_matches_batch_exactly(spark):

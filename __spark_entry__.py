@@ -22,6 +22,7 @@ from duckdb_sudan__spark.geo import states as geo_states
 from duckdb_sudan__spark.operators import ORACLES, QUERIES
 from duckdb_sudan__spark.oracle import values_sql
 from duckdb_sudan__spark.providers import api
+from duckdb_sudan__spark.session import local_frame
 
 operators.load_all()
 
@@ -50,7 +51,7 @@ def _sudan_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyspark.sql import functions as F
 
         names = [(p,) for p, _ in _geocode_probe_rows()]
-        df = spark.createDataFrame(names, "name string")
+        df = local_frame(spark, names, "name string")
         return df.select("name", geo_states.geocode_expr(F.col("name")).alias("iso_code")).orderBy("name")
 
     return {

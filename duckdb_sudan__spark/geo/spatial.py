@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from duckdb_sudan__spark.geo import states as geo_states
 from duckdb_sudan__spark.operators import register
+from duckdb_sudan__spark.session import local_frame
 
 
 def _geometry_edges(doc: dict) -> np.ndarray:
@@ -102,6 +103,10 @@ def assign_points_to_states(
             unassigned[hit] = False
         return pd.Series(out)
 
+    # nondeterministic, so Catalyst never copies the call into a filter
+    # pushed below this projection: `where(iso_code IS NOT NULL)` on the
+    # result would otherwise run the ray cast a second time per row
+    which_state = which_state.asNondeterministic()
     return points.withColumn("iso_code", which_state(F.col(lon_col), F.col(lat_col)))
 
 
@@ -116,7 +121,7 @@ def sudan_point_in_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes.append((f"centroid:{iso}", lon, lat))
         probes.append((f"offset:{iso}", lon + 0.2, lat + 0.1))
     probes += [("outside:atlantic", -30.0, 0.0), ("outside:pole", 30.0, 89.0)]
-    df = spark.createDataFrame(probes, "probe string, lon double, lat double")
+    df = local_frame(spark, probes, "probe string, lon double, lat double")
     return assign_points_to_states(df).orderBy("probe")
 
 
@@ -199,7 +204,7 @@ def sudan_nearest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("outside:egypt_border", 31.0, 23.5),
         ("outside:atlantic", -30.0, 0.0),
     ]
-    df = spark.createDataFrame(probes, "probe string, lon double, lat double")
+    df = local_frame(spark, probes, "probe string, lon double, lat double")
     out = assign_points_to_states(df).withColumn("nn", nearest(F.col("lon"), F.col("lat")))
     return (
         out.select(
@@ -244,15 +249,6 @@ def _geom_2area_and_parts(doc: dict) -> tuple[int, int, int]:
             total -= _ring_2area_microdeg(hole)
             n_holes += 1
     return total, len(polys), n_holes
-
-
-def _state_area_rows() -> list[tuple]:
-    rows = []
-    for i, (iso, name, _ar, _lon, _lat) in enumerate(geo_states.SUDAN_STATES):
-        doc = json.loads(geo_states.state_boundary_geojson(i))
-        a2, n_parts, n_holes = _geom_2area_and_parts(doc)
-        rows.append((iso, name, a2, n_parts, n_holes))
-    return sorted(rows)
 
 
 def _state_areas_oracle() -> str:
@@ -1679,11 +1675,12 @@ def _register_live_gadm_tier() -> bool:
         offline tier, only the geometry differs. Output is one row per
         GADM-matched state."""
         live = live_gadm_state_rows()
-        bounds = spark.createDataFrame(
-            live, "iso_code string, state_name string, geojson string"
+        bounds = local_frame(
+            spark, live, "iso_code string, state_name string, geojson string"
         )
         rings = [(iso, _geometry_edges(json.loads(gj))) for iso, _name, gj in live]
-        probes = spark.createDataFrame(
+        probes = local_frame(
+            spark,
             [
                 (iso, lon, lat)
                 for iso, _name, _ar, lon, lat in geo_states.SUDAN_STATES

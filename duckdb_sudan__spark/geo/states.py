@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from duckdb_sudan__spark.oracle import values_sql
+from duckdb_sudan__spark.session import local_frame
 
 # (iso_code, name, name_ar, centroid_lon, centroid_lat)
 # Public data: ISO 3166-2:SD codes + state centroids (geo_functions.cpp:35-55)
@@ -267,7 +268,7 @@ STATES_SCHEMA = T.StructType(
 
 def sudan_states(spark: SparkSession) -> DataFrame:
     """SUDAN_States() — 18 rows; always broadcast-able."""
-    return spark.createDataFrame(states_rows(), STATES_SCHEMA)
+    return local_frame(spark, states_rows(), STATES_SCHEMA)
 
 
 GADM_LOCALITY_URL = "https://geodata.ucdavis.edu/gadm/gadm4.1/json/gadm41_SDN_2.json"
@@ -436,7 +437,7 @@ def sudan_boundaries(spark: SparkSession, level: str, offline: bool = True) -> D
             live = parse_gadm_states(provider_http.http_get_json(GADM_STATE_URL))
             rows = live or rows
     schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # -- SUDAN_GeoCode -----------------------------------------------------------

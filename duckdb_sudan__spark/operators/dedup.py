@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
 from duckdb_sudan__spark.operators.text import SQL_BOW_FP, bow_fingerprint_expr
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # dedup_exact — hash-groupBy exact dedup on content fingerprint
@@ -91,12 +91,6 @@ FROM (
 WHERE jac >= {JACCARD_TAU}
 ORDER BY id_a, id_b
 """
-
-
-def shingles_expr():
-    return F.array_distinct(
-        F.expr("transform(sequence(1, greatest(length(text) - 2, 1)), i -> substring(text, i, 3))")
-    )
 
 
 def _trigram_codes(text: str) -> np.ndarray:
@@ -793,10 +787,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", simhash64(F.col("text")).alias("sim"))
         .cache()
     )
-    # r15: materialize the simhash kernel before banding fans it out to
+    # materialize the simhash kernel before banding fans it out to
     # both join sides + the hot-bucket aggregate (3 consumers racing
-    # the Arrow kernel otherwise). Per-site matched A/B in
-    # OPTIMIZATION_r15.md.
+    # the Arrow kernel otherwise)
     sh.count()
     chunks = F.explode(
         F.expr("transform(sequence(0, 3), b -> struct(b AS band, shiftright(sim, b * 16) & 65535 AS chunk))")
@@ -1746,7 +1739,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint), so n_pairs here counts ENDPOINT rows = 2× pairs —
     matched exactly on both sides (the doc-count needs the union
     anyway; consumers halve n_pairs for the pair count)."""
-    taus = spark.createDataFrame([(float(t),) for t in _SWEEP_TAUS], "tau double")
+    taus = local_frame(spark, [(float(t),) for t in _SWEEP_TAUS], "tau double")
     pairs = dedup_ngram_jaccard(spark, sf_dir)
     matched = pairs.join(F.broadcast(taus), F.col("jac") >= F.col("tau"))
     # r14: emit both endpoints with ONE map-side explode instead of a

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # ts_gapfill_interpolate — linear interpolation between observed days
@@ -239,7 +239,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.where(~is_eval).select("vec_id", "embedding")
     out_schema = "vec_id long, max_cos double, n_eval_hits long"
     if not ev_rows:
-        return spark.createDataFrame([], out_schema + ", contaminated boolean")
+        return local_frame(spark, [], out_schema + ", contaminated boolean")
     EV = np.array([r.embedding for r in ev_rows], dtype=np.float64)
     ev_norm = np.sqrt(_fold_sq_norm(EV))
 

@@ -36,7 +36,7 @@ from duckdb_sudan__spark.operators.olap18 import (
     KS_BIN_SCALE,
     KS_BINS,
 )
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # ml_lift_gain_curve — cumulative-response (gains) chart on the score grid
@@ -769,7 +769,7 @@ ORDER BY fraction
 @register("ml_auc_by_sample_fraction", AUC_FRAC_ORACLE)
 def ml_auc_by_sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    fr = spark.createDataFrame(AUC_FRACTIONS, "fraction string, thresh string")
+    fr = local_frame(spark, AUC_FRACTIONS, "fraction string, thresh string")
     scored = e.select(
         F.round(F.col("value") * 100).cast("bigint").alias("s"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
@@ -1019,8 +1019,8 @@ def ts_cross_correlation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
         .cast("bigint").alias("y"),
     )
-    lags = spark.createDataFrame(
-        [(k,) for k in range(-XCORR_MAX_LAG, XCORR_MAX_LAG + 1)], "lag_days bigint"
+    lags = local_frame(
+        spark, [(k,) for k in range(-XCORR_MAX_LAG, XCORR_MAX_LAG + 1)], "lag_days bigint"
     )
     b = daily.select(F.col("di").alias("di2"), F.col("y").alias("y2"))
     aligned = (

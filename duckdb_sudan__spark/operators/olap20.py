@@ -41,7 +41,7 @@ from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
 from duckdb_sudan__spark.operators.olap18 import CONFUSION_TAU
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # ml_mcc_binary — Matthews correlation + Youden's J for the τ classifier
@@ -376,7 +376,7 @@ FROM dcg, idcg, pos
 @register("ml_ndcg_at_k", NDCG_ORACLE)
 def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    disc = spark.createDataFrame(_NDCG_DISC, "rnk INT, disc_micro BIGINT")
+    disc = local_frame(spark, _NDCG_DISC, "rnk INT, disc_micro BIGINT")
     topk = (
         e.select("event_type", "value", "event_id")
         .orderBy(F.desc("value"), "event_id")

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # ev_survival_km_censored — right-censored time-to-first-purchase table
@@ -260,7 +260,7 @@ def agg_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = digits.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     tot = counts.agg(F.sum("cnt").cast("bigint").alias("n"))
-    bf = spark.createDataFrame(_BENFORD_PPM, "digit INT, benford_ppm INT").select(
+    bf = local_frame(spark, _BENFORD_PPM, "digit INT, benford_ppm INT").select(
         F.col("digit").cast("bigint").alias("digit"),
         F.col("benford_ppm").cast("bigint").alias("benford_ppm"),
     )

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # files_parquet_footer_stats — row-group audit via distributed footer reads
@@ -129,8 +129,8 @@ FOOTER_ORACLE = (
 
 @register("files_parquet_footer_stats", FOOTER_ORACLE)
 def files_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    files = spark.createDataFrame(
-        [(t, f"{sf_dir}/{t}.parquet") for t in _FOOTER_TABLES],
+    files = local_frame(
+        spark, [(t, f"{sf_dir}/{t}.parquet") for t in _FOOTER_TABLES],
         "table_name STRING, path STRING",
     ).repartition(len(_FOOTER_TABLES))
     return (
@@ -164,7 +164,7 @@ ORDER BY a, b
 
 @register("num_intdiv_negative_parity", INTDIV_ORACLE)
 def num_intdiv_negative_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = spark.createDataFrame(_PARITY_GRID, "a INT, b INT")
+    g = local_frame(spark, _PARITY_GRID, "a INT, b INT")
     return g.selectExpr(
         "CAST(a AS BIGINT) AS a",
         "CAST(b AS BIGINT) AS b",

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # str_url_parse_parity — parse_url vs an independent regex decomposition
@@ -96,7 +96,7 @@ ORDER BY url
 
 @register("str_url_parse_parity", URL_PARSE_ORACLE)
 def str_url_parse_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = spark.createDataFrame([(x,) for x in _URLS], "url STRING")
+    u = local_frame(spark, [(x,) for x in _URLS], "url STRING")
     return u.selectExpr(
         "url",
         "parse_url(url, 'PROTOCOL') AS protocol",

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_sudan__spark.operators import register
+from duckdb_sudan__spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # num_round_even_parity — bround ≡ round_even on the double grid
@@ -67,7 +68,7 @@ def num_round_even_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s in sorted({s for _, s in _ROUND_GRID}):
         vals = [(v,) for v, sc in _ROUND_GRID if sc == s]
         slices.append(
-            spark.createDataFrame(vals, "v DOUBLE").selectExpr(
+            local_frame(spark, vals, "v DOUBLE").selectExpr(
                 "v", f"CAST({s} AS BIGINT) AS s", f"bround(v, {s}) + 0.0 AS rounded"
             )
         )
@@ -108,7 +109,7 @@ ORDER BY id
 
 @register("win_nulls_ordering_parity", NULLS_ORDER_ORACLE)
 def win_nulls_ordering_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = spark.createDataFrame(_NULLS_ROWS, "id INT, v INT")
+    g = local_frame(spark, _NULLS_ROWS, "id INT, v INT")
     return g.selectExpr(
         "CAST(id AS BIGINT) AS id",
         "CAST(v AS BIGINT) AS v",

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # agg_weighted_median — quantity-weighted median price per return flag
@@ -127,7 +127,7 @@ ORDER BY d, m
 
 @register("dt_month_arith_edges", MONTH_EDGE_ORACLE)
 def dt_month_arith_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = spark.createDataFrame(_EDGE_DATES, "ds STRING, m INT")
+    g = local_frame(spark, _EDGE_DATES, "ds STRING, m INT")
     return g.selectExpr(
         "CAST(CAST(ds AS DATE) AS TIMESTAMP) AS d",
         "CAST(m AS BIGINT) AS m",
@@ -174,7 +174,7 @@ ORDER BY grp
 
 @register("agg_empty_null_semantics", NULLSEM_ORACLE)
 def agg_empty_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = spark.createDataFrame(_NULLSEM_ROWS, "grp STRING, v INT")
+    g = local_frame(spark, _NULLSEM_ROWS, "grp STRING, v INT")
     return g.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.count("v").cast("bigint").alias("n_vals"),

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # persisted relations from the previous invocation, released at the
 # next entry call (the graph.py _TRI_CACHE_HANDLES discipline)
@@ -430,7 +430,7 @@ def dt_iso_week_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an engine-free in-row witness (probed 144/144 green before
     registration — this entry pins that measurement as a driver-hashed
     grid the way num_round_even_parity pins rounding)."""
-    g = spark.createDataFrame([(d,) for d in _ISO_DATES], "d string").selectExpr(
+    g = local_frame(spark, [(d,) for d in _ISO_DATES], "d string").selectExpr(
         "CAST(d AS DATE) AS d"
     )
     return g.selectExpr(

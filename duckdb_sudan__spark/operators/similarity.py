@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 COSINE_SQL = """
 aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)
@@ -134,7 +134,7 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     scored = _brute_cosine_scored(spark, e)
     if scored is None:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -177,7 +177,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     scored = _brute_cosine_scored(spark, e)
     if scored is None:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     return scored.where(F.col("cos") >= RANGE_TAU).orderBy("query_id", "neighbor_id")
 
 
@@ -309,7 +309,7 @@ def ann_mips_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     qrows = e.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
     if not qrows:
-        return spark.createDataFrame([], "query_id long, neighbor_id long, dot double")
+        return local_frame(spark, [], "query_id long, neighbor_id long, dot double")
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
 
@@ -622,11 +622,11 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     sample = e.select("embedding").limit(TRAIN_CAP).collect()
     if not sample:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     books = _train_pq_codebooks([r.embedding for r in sample])
     qrows = e.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
     if not qrows:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
     Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
@@ -686,8 +686,8 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= PQ_RERANK)
         .select("query_id", "neighbor_id")
     )
-    qdf = spark.createDataFrame(
-        [(int(i), [float(v) for v in r.embedding]) for i, r in zip(q_ids, qrows)],
+    qdf = local_frame(
+        spark, [(int(i), [float(v) for v in r.embedding]) for i, r in zip(q_ids, qrows)],
         "query_id long, q_emb array<double>",
     )
     reranked = (
@@ -764,11 +764,11 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     sample = e.select("embedding").limit(TRAIN_CAP).collect()
     if not sample:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     cent, books = _train_ivfpq([r.embedding for r in sample])
     qrows = e.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
     if not qrows:
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return local_frame(spark, [], _SCORED_SCHEMA)
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
@@ -815,7 +815,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(q_ids[p]), [int(c) for c in np.argsort(-qdotc[p])[:N_PROBE]])
         for p in range(len(q_ids))
     ]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cells array<int>").select(
+    probes = local_frame(spark, probe_rows, "query_id long, cells array<int>").select(
         "query_id", F.explode("cells").alias("cell")
     )
     scored = (
@@ -832,8 +832,8 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= IVFPQ_RERANK)
         .select("query_id", "neighbor_id")
     )
-    qdf = spark.createDataFrame(
-        [(int(i), [float(v) for v in r.embedding]) for i, r in zip(q_ids, qrows)],
+    qdf = local_frame(
+        spark, [(int(i), [float(v) for v in r.embedding]) for i, r in zip(q_ids, qrows)],
         "query_id long, q_emb array<double>",
     )
     reranked = (
@@ -992,7 +992,7 @@ def emb_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(i), float(evals[i]), float(evals[i] / total))
         for i in range(min(PCA_TOP_K, d))
     ]
-    return spark.createDataFrame(rows, "component int, eigenvalue double, explained_ratio double")
+    return local_frame(spark, rows, "component int, eigenvalue double, explained_ratio double")
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
-from duckdb_sudan__spark.session import load_table
+from duckdb_sudan__spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # bpe_train_merges — iterated BPE merge-table training on the corpus.
@@ -107,7 +107,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = (
         "merge_rank int, left string, right string, merged string, pair_count bigint"
     )
-    return spark.createDataFrame(merges, schema).orderBy("merge_rank")
+    return local_frame(spark, merges, schema).orderBy("merge_rank")
 
 
 # ---------------------------------------------------------------------------

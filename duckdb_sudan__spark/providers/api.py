@@ -35,6 +35,7 @@ from duckdb_sudan__spark.oracle import values_sql
 from duckdb_sudan__spark.providers import http, samples
 from duckdb_sudan__spark.providers.pushdown import YearFilter
 from duckdb_sudan__spark.providers.registry import PROVIDERS, resolve_countries, validate_country_codes
+from duckdb_sudan__spark.session import local_frame
 
 # -- schemas (exact reference column names/types) ----------------------------
 
@@ -188,7 +189,7 @@ def _provider_frame(
     if settings is None and not offline:
         settings = http.extract_http_settings(spark.conf)
     data = [r for iso3 in iso3s for r in rows(provider, params, iso3, yf, offline, settings)]
-    return spark.createDataFrame(data, fn.schema)
+    return local_frame(spark, data, fn.schema)
 
 
 # -- data functions ----------------------------------------------------------
@@ -264,7 +265,7 @@ def providers_rows() -> list[tuple]:
 
 def sudan_providers(spark: SparkSession) -> DataFrame:
     """SUDAN_Providers(). Reference info_functions.cpp:30-125."""
-    return spark.createDataFrame(providers_rows(), PROVIDERS_SCHEMA)
+    return local_frame(spark, providers_rows(), PROVIDERS_SCHEMA)
 
 
 def wb_indicator_rows(search: str | None = None) -> list[tuple]:
@@ -277,7 +278,7 @@ def wb_indicator_rows(search: str | None = None) -> list[tuple]:
 
 def sudan_wb_indicators(spark: SparkSession, search: str | None = None) -> DataFrame:
     """SUDAN_WB_Indicators(search := ...). Reference wb_indicators.cpp:40-95."""
-    return spark.createDataFrame(wb_indicator_rows(search), WB_INDICATORS_SCHEMA)
+    return local_frame(spark, wb_indicator_rows(search), WB_INDICATORS_SCHEMA)
 
 
 def who_indicator_rows(search: str | None = None) -> list[tuple]:
@@ -290,7 +291,7 @@ def who_indicator_rows(search: str | None = None) -> list[tuple]:
 
 def sudan_who_indicators(spark: SparkSession, search: str | None = None) -> DataFrame:
     """SUDAN_WHO_Indicators(search := ...). Reference who_functions.cpp:300-330."""
-    return spark.createDataFrame(who_indicator_rows(search), WHO_INDICATORS_SCHEMA)
+    return local_frame(spark, who_indicator_rows(search), WHO_INDICATORS_SCHEMA)
 
 
 def search_rows(query: str) -> list[tuple]:
@@ -311,7 +312,7 @@ def sudan_search(spark: SparkSession, query: str | None = None) -> DataFrame:
     """SUDAN_Search(query := ...). Reference info_functions.cpp:154-171."""
     if not query:
         raise ValueError("SUDAN: The 'query' parameter is required for SUDAN_Search().")
-    return spark.createDataFrame(search_rows(query), SEARCH_SCHEMA)
+    return local_frame(spark, search_rows(query), SEARCH_SCHEMA)
 
 
 

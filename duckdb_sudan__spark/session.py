@@ -8,10 +8,13 @@ exchange. On a real cluster only master/shuffle-partitions change.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES = (
     "region",
@@ -110,7 +113,17 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all test tables as temp views for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+def local_frame(spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str) -> DataFrame:
+    """The one way to build a relation from driver-side Python rows.
+
+    `schema` is a StructType or a DDL string. The rows become a typed
+    Arrow table, column by column, which createDataFrame turns into a
+    LocalRelation: no RDD, no Python worker when it executes, and exact
+    size statistics for the planner. (A Python list handed straight to
+    createDataFrame becomes a PythonRDD instead, and every execution
+    of it runs Python tasks.)"""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)

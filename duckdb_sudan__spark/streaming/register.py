@@ -187,7 +187,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     between delta write and manifest commit is replay-safe
     (crash-window test)."""
     from duckdb_sudan__spark.operators import dedup
-    from duckdb_sudan__spark.session import load_table
+    from duckdb_sudan__spark.session import load_table, local_frame
 
     with tempfile.TemporaryDirectory() as tmp:
         index_dir = dedup.build_minhash_index(spark, sf_dir, out_dir=os.path.join(tmp, "index"))
@@ -229,7 +229,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(pairs_dir, "batch-*")
             )
         else:  # zero micro-batches drained: empty relation, same schema
-            drained = spark.createDataFrame([], pairs_schema)
+            drained = local_frame(spark, [], pairs_schema)
         fp = f"v1:{os.path.getmtime(os.path.join(sf_dir, 'documents.parquet'))}"
         final = _persist_result(drained, sf_dir, "stream_dedup_incr_pairs", fp)
     return spark.read.parquet(final).orderBy("id_a", "id_b")
@@ -410,7 +410,7 @@ def stream_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced in STREAM_EQUIV.md). Scale: state is one short string per
     open order; production evicts on order closure — see
     events.basket_pairs_stream."""
-    from duckdb_sudan__spark.session import load_table
+    from duckdb_sudan__spark.session import load_table, local_frame
     from duckdb_sudan__spark.streaming.sinks import _persist_result
 
     li_src = os.path.join(sf_dir, "lineitem.parquet")
@@ -466,8 +466,8 @@ def stream_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.sum("c").cast("bigint").alias("n_ab"))
             )
         else:
-            final = spark.createDataFrame(
-                [], "brand_a string, brand_b string, n_ab bigint"
+            final = local_frame(
+                spark, [], "brand_a string, brand_b string, n_ab bigint"
             )
         out_dir = _persist_result(final, sf_dir, "basket_pairs", fingerprint)
     return spark.read.parquet(out_dir).orderBy("brand_a", "brand_b")

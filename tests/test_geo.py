@@ -323,7 +323,12 @@ def test_state_point_counts_cover_all_states_and_sum_to_interior(spark):
     from duckdb_sudan__spark.operators import QUERIES
 
     operators.load_all()
-    rows = QUERIES["sudan_state_point_counts"](spark, None).collect()
+    df = QUERIES["sudan_state_point_counts"](spark, None)
+    # the ray cast runs once per row: the NOT NULL filter pushed below
+    # the projection must not carry its own copy of the UDF
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    rows = df.collect()
     assert len(rows) == 18, [r.iso_code for r in rows]
     assert all(r.n_points > 0 for r in rows)
     assert sum(r.n_points for r in rows) > 1000  # most of the 3600-pt grid

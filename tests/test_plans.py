@@ -224,6 +224,24 @@ def test_no_uncapped_driver_collect_in_package():
         )
 
 
+def test_driver_rows_go_through_local_frame():
+    """`session.local_frame` is the one way to build a relation from
+    driver-side Python rows: a list handed to createDataFrame becomes a
+    PythonRDD that runs Python workers on every execution."""
+    import inspect
+    import pathlib
+
+    from duckdb_sudan__spark import session
+
+    pkg = pathlib.Path(operators.__file__).resolve().parent.parent
+    calls = {
+        py.relative_to(pkg.parent).as_posix(): py.read_text().count("createDataFrame(")
+        for py in [*pkg.rglob("*.py"), pkg.parent / "__spark_entry__.py"]
+    }
+    assert {k: n for k, n in calls.items() if n} == {"duckdb_sudan__spark/session.py": 1}, calls
+    assert "createDataFrame(" in inspect.getsource(session.local_frame)
+
+
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     """The §8 co-location claim, demonstrated: orders and lineitem
     written bucketBy(8, orderkey) join with NO Exchange in the plan —

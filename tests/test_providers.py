@@ -7,6 +7,7 @@ sudan_search.test assertions, plus oracle round-trips.
 
 import pytest
 
+from duckdb_sudan__spark.geo import states as geo_states
 from duckdb_sudan__spark.providers import api
 from duckdb_sudan__spark.providers.pushdown import (
     YearFilter,
@@ -19,6 +20,28 @@ from duckdb_sudan__spark.providers.pushdown import (
 from duckdb_sudan__spark.providers.cache import ResponseCache
 from duckdb_sudan__spark.providers.registry import normalize_country_code, validate_country_codes
 from tests.conftest import assert_matches_oracle
+
+
+_DRIVER_ROW_FRAMES = {
+    "worldbank": lambda s: api.sudan_worldbank(s, "SP.POP.TOTL", ["SDN", "EGY"]),
+    "who": lambda s: api.sudan_who(s, "MDG_0000000026"),
+    "fao": lambda s: api.sudan_fao(s, "QCL", "production", ["SDN", "EGY"]),
+    "unhcr": lambda s: api.sudan_unhcr(s, "refugees"),
+    "ilo": lambda s: api.sudan_ilo(s, "UNE_DEAP_SEX_AGE_RT"),
+    "providers": api.sudan_providers,
+    "wb_indicators": lambda s: api.sudan_wb_indicators(s, "GDP"),
+    "who_indicators": lambda s: api.sudan_who_indicators(s, "mortality"),
+    "search": lambda s: api.sudan_search(s, "population"),
+    "states": geo_states.sudan_states,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DRIVER_ROW_FRAMES))
+def test_driver_rows_plan_as_local_relation(spark, name):
+    """Driver-side rows become a LocalRelation: no RDD, so executing
+    the frame starts no Python worker."""
+    plan = _DRIVER_ROW_FRAMES[name](spark)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
 def test_providers_five_rows(spark):

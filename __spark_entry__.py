@@ -13,7 +13,10 @@ oracle_sql()    — exact DuckDB SQL for every SQL-expressible entry;
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -116,244 +119,53 @@ def _sudan_oracles() -> dict[str, str]:
     }
 
 
-# The driver's correctness gate hashes only the FIRST 50 entries of
-# queries() (verified round 1: CORRECTNESS_r01.json keys == the first 50
-# keys in registration order). With more oracled entries than window
-# slots, the order below ROTATES coverage each round.
-#
-# r7 window (per the r6 verdict's item 1): ALL 39 oracled entries that
-# have NEVER appeared in a driver window (computed at r7 open:
-# oracled ∖ (r1∪…∪r6 CORRECTNESS keys) — the r6-wave additions across
-# olap5/olap11/olap12, text4, similarity, dedup, sources/files),
-# followed by the 11 alphabetically-first of the 48 stale rows whose
-# latest driver check was r4 (deterministic tie-break; all 48 are
-# equally old). After r7, r5∪r6∪r7 covers all 187 pre-r7 oracled
-# entries except 37 r4-green rows, which are the committed r8 window
-# (37 + 13 slack slots for r7-wave additions — see the r8 note below
-# the list). Every parked entry stays locally verified: pytest re-runs
-# the driver comparison for each oracled entry on every run, and
-# CORRECTNESS_LOCAL sweeps sf0.01+sf0.1 in both fetch modes.
-#
-# r8 window priority, computed at r7 close: the oracled entries ADDED
-# in r7 go FIRST (dual-SF dual-mode verified locally on registration,
-# never driver-checked):
-#   dedup_repeated_spans, text_quality_classifier,
-#   quality_keep_rates_by_lang, span_dedup_cut_rate,
-#   dedup_cluster_size_histogram, ts_yoy_growth,
-#   sample_quality_weighted, files_schema_evolution,
-#   ev_multitouch_attribution, ev_conversion_lag_quantiles,
-#   ev_dau_wau_mau, cte_reused_aggregate, str_funcs2,
-#   num_funcs_parity, num_try_arith, dt_funcs2, sudan_state_areas,
-#   sudan_wb_yoy, pipeline_quality_report, dedup_cross_source_matrix,
-#   agg_weighted_avg, ev_ab_test_lift, ts_ema_smoothing,
-#   ts_changepoint_cusum, text_perplexity_proxy,
-#   corpus_perplexity_buckets, files_compact_small_files,
-#   files_zorder_cluster, sketch_countmin, dedup_containment,
-#   join_bloom_runtime_filter, dataset_split_train_valid,
-#   agg_entropy_bits, ts_stl_decompose, agg_winsorized_trimmed,
-#   sample_reservoir_per_group, sketch_kmv_set_ops, list_funcs_parity,
-#   ts_holt_linear
-# then the remaining r4 rows fill the rest (39 r7-wave + 11 of the 37
-# r4 rows; the 26 left-over r4 rows + rotation debt go to r9):
-#   map_event_counts, pivot_status, q1_pricing_summary,
-#   q3_shipping_priority, q4_order_priority, q7_volume_shipping,
-#   q10_returned_items, q14_promo_effect, q16_supplier_cnt,
-#   q17_small_qty, q18_large_orders, q19_disjunctive,
-#   q20_heavy_shippers, q21_waiting_supplier, qualify_top_orders,
-#   recursive_cte_chain, rollup_sales, setops_customers,
-#   sudan_boundaries_state, sudan_fao, sudan_geocode, sudan_ilo,
-#   sudan_providers, sudan_search, sudan_states, sudan_unhcr,
-#   sudan_wb_indicators, sudan_who, sudan_who_indicators,
-#   sudan_worldbank, tok_positions, ts_locf_fill, ts_ohlc_hourly,
-#   unpivot_nation_counts, w1_window_rank, w2_window_running,
-#   w4_value_windows
-# r12 window, kept as the executed-history record (CORRECTNESS_r12.json
-# is 50/50 green on exactly these keys, in this order).
-_R12_WINDOW = [
-    # ================= r12 window (the committed r11-close plan,
-    # executed verbatim: the 50 newest-first of the 89 oracled entries
-    # added in r11 — each dual-SF dual-mode verified on registration,
-    # never driver-checked before this round) ==========================
-    "sudan_state_intersect_area", "ml_lift_gain_curve",
-    "ml_calibration_ece", "ml_roc_curve_binned", "ml_psi_drift_bits",
-    "agg_hhi_concentration", "struct_funcs_parity", "ev_hazard_curve",
-    "ts_theil_sen_slope", "files_orc_roundtrip",
-    "sudan_state_centroid_bbox", "win_groups_frame_emulated",
-    "ts_forecast_backtest_mae", "ml_auc_by_sample_fraction",
-    "ts_anomaly_rolling_mad", "q_customer_reorder_gaps",
-    "graph_degree_histogram", "graph_common_neighbors",
-    "sample_soft_dedup_weights", "pipeline_data_card",
-    "files_dynamic_partition_overwrite", "ts_cross_correlation_lags",
-    "ev_dose_response_conversion", "dedup_source_priority",
-    "ml_best_f1_threshold", "q_topn_with_other", "ml_kfold_balance",
-    "ev_type_affinity_pmi", "ts_intervention_did", "emb_norm_histogram",
-    "q_rank_stability_spearman", "ts_local_peaks",
-    "ev_attribution_position", "dedup_threshold_sweep",
-    "text_charclass_profile", "emb_dim_stats", "ml_mcc_binary",
-    "ts_mann_kendall", "ev_time_to_nth_event", "win_ntile_parity",
-    "text_simpson_diversity", "ml_ndcg_at_k", "ml_cohens_kappa",
-    "ts_bollinger_breaches", "ev_signup_to_first_purchase",
-    "sudan_states_shared_borders", "ml_mrr_per_user",
-    "ev_session_type_cooccurrence", "ts_iso_week_revenue",
-    "ev_survival_km_censored",
-]
+# The driver's correctness gate hashes only the first 50 queries() keys.
+_WINDOW = 50
 
-# r13 window priority, computed at r12: FIRST the 39 r11-added oracled
-# entries that overflowed the r12 window (newest last, per the
-# committed r11 plan) —
-#   ml_regression_metrics, agg_benford_digits, stats_welch_ttest,
-#   q_price_index_laspeyres, ev_growth_accounting,
-#   q_duplicate_order_suspects, dt_tz_localize_ny,
-#   graph_two_hop_neighborhood, ml_concordance_index,
-#   q_demand_variability_xyz, ml_stratified_ate,
-#   files_parquet_footer_stats, num_intdiv_negative_parity,
-#   corpus_doc_length_gini, str_url_parse_parity, q_revenue_bridge_pvm,
-#   ml_jackknife_ci, ml_threshold_cost_curve, ev_ab_srm_check,
-#   ml_two_proportion_ztest, sample_stratified_neyman,
-#   ev_interval_union_coverage, ev_cuped_adjustment, ml_auc_by_group,
-#   dt_fiscal_calendar_rollup, sudan_state_convex_hull,
-#   num_round_even_parity, win_nulls_ordering_parity,
-#   agg_weighted_median, dt_month_arith_edges, agg_empty_null_semantics,
-#   q_tier_migration_matrix, ts_pettitt_changepoint,
-#   ml_average_precision_binned, ev_purchase_streaks,
-#   q_part_adoption_curve, ml_calibration_slope, text_readability_fk,
-#   q_abc_xyz_cross
-# — THEN any oracled entries ADDED in r12 (the r12 wave is capped at
-# ~10 so this window drains the never-driver-checked backlog to ZERO;
-# see VERDICT r11 item 2) —
-#   sudan_geom_clip_geojson, q_cohort_retention_triangle,
-#   q_market_basket_pairs, ml_auc_exact_rank, text_bigram_cond_entropy,
-#   files_bucketed_colocated_join
-# — then (window space permitting) the alphabetically-first of the 33
-# r6-checked rows left over from the r11 window (the rest + rotation
-# debt to r14) —
-#   ev_scd2_intervals, ev_transition_matrix, files_csv_roundtrip,
-#   files_jsonl_roundtrip, grouping_id_sets, hybrid_search_rrf,
-#   join_lateral_topn, join_positional, join_semi_anti, lm_oov_rate,
-#   mm_manifest_stats, ngram_lm_counts, pipeline_chunk_index,
-#   pipeline_dedup_cascade, sample_temperature_mix, setops_by_name,
-#   sketch_heavy_hitters, str_distance, str_regex_extract_all,
-#   str_try_parse, sudan_wb_pivot, summarize_stats, text_chunk_overlap,
-#   text_ngram_novelty, text_pii_scrub, tfidf_topk, ts_time_bucket,
-#   win_distribution, win_exclude_current, win_ignore_nulls,
-#   win_rolling_regression, win_running_distinct, win_time_range_sliding
-# — then the oldest remaining class (r7-checked rows, alphabetically)
-# fills any remaining slots.
+# Oracled entries rewritten after their last green driver row:
+# {name: round of the rewrite}. A driver row counts for them only from
+# that round on.
+_REWRITTEN = {
+    "dedup_components": 14,
+    "graph_common_neighbors": 15,
+    "graph_triangle_count": 15,
+    "graph_two_hop_neighborhood": 15,
+    "q_cohort_retention_triangle": 15,
+    "q_market_basket_pairs": 15,
+    "text_perplexity_proxy": 15,
+}
 
 
-# The committed r13 window as a MACHINE-CHECKED literal (r12 close):
-# the prose plan above is authoritative for rationale, this list is
-# authoritative for content — tests/test_entry.py pins every name to a
-# registered oracled entry, so a typo in the plan can never silently
-# waste r13 driver coverage. r13 opens by assigning
-# _WINDOW_PRIORITY = _R13_WINDOW_PLAN verbatim.
-# Composition: the 39 r11-overflow entries (newest last) + the 6 r12
-# additions + the 5 alphabetically-first r6-checked leftovers = 50.
-_R13_WINDOW_PLAN = [
-    "ml_regression_metrics", "agg_benford_digits", "stats_welch_ttest",
-    "q_price_index_laspeyres", "ev_growth_accounting",
-    "q_duplicate_order_suspects", "dt_tz_localize_ny",
-    "graph_two_hop_neighborhood", "ml_concordance_index",
-    "q_demand_variability_xyz", "ml_stratified_ate",
-    "files_parquet_footer_stats", "num_intdiv_negative_parity",
-    "corpus_doc_length_gini", "str_url_parse_parity",
-    "q_revenue_bridge_pvm", "ml_jackknife_ci", "ml_threshold_cost_curve",
-    "ev_ab_srm_check", "ml_two_proportion_ztest",
-    "sample_stratified_neyman", "ev_interval_union_coverage",
-    "ev_cuped_adjustment", "ml_auc_by_group", "dt_fiscal_calendar_rollup",
-    "sudan_state_convex_hull", "num_round_even_parity",
-    "win_nulls_ordering_parity", "agg_weighted_median",
-    "dt_month_arith_edges", "agg_empty_null_semantics",
-    "q_tier_migration_matrix", "ts_pettitt_changepoint",
-    "ml_average_precision_binned", "ev_purchase_streaks",
-    "q_part_adoption_curve", "ml_calibration_slope", "text_readability_fk",
-    "q_abc_xyz_cross", "sudan_geom_clip_geojson",
-    "q_cohort_retention_triangle", "q_market_basket_pairs",
-    "ml_auc_exact_rank", "text_bigram_cond_entropy",
-    "files_bucketed_colocated_join", "ev_scd2_intervals",
-    "ev_transition_matrix", "files_csv_roundtrip", "files_jsonl_roundtrip",
-    "grouping_id_sets",
-]
-
-# The committed r14 window as a MACHINE-CHECKED literal (r13 close),
-# computed from the committed CORRECTNESS_r*.json files (script in the
-# r13 transcript; tests/test_entry.py re-derives the composition):
-# FIRST the 6 oracled entries ADDED in r13 (the wave was capped at 6 —
-# concave clip + the olap39 five — so these are the ONLY entries with
-# no driver row after r13 executes), THEN the 28 r6-checked leftovers
-# (alphabetical; the oldest stale class), THEN the alphabetically-first
-# 16 of the 50 r7-checked rows. 6 + 28 + 16 = 50. r14 opens by
-# assigning _WINDOW_PRIORITY = _R14_WINDOW_PLAN verbatim; the remaining
-# 34 r7 rows + rotation debt go to r15.
-_R14_WINDOW_PLAN = [
-    "ev_rolling_retention", "ev_weekly_active_streaks",
-    "q_brand_repeat_rate", "q_revenue_lorenz_bands",
-    "sudan_geom_clip_concave", "ts_updown_streaks",
-    "hybrid_search_rrf", "join_lateral_topn", "join_positional",
-    "join_semi_anti", "lm_oov_rate", "mm_manifest_stats",
-    "ngram_lm_counts", "pipeline_chunk_index", "pipeline_dedup_cascade",
-    "sample_temperature_mix", "setops_by_name", "sketch_heavy_hitters",
-    "str_distance", "str_regex_extract_all", "str_try_parse",
-    "sudan_wb_pivot", "summarize_stats", "text_chunk_overlap",
-    "text_ngram_novelty", "text_pii_scrub", "tfidf_topk",
-    "ts_time_bucket", "win_distribution", "win_exclude_current",
-    "win_ignore_nulls", "win_rolling_regression", "win_running_distinct",
-    "win_time_range_sliding",
-    "agg_argmax", "agg_bitwise", "agg_bool", "agg_corr_matrix",
-    "agg_mad_robust", "agg_median", "ann_mips_dot", "bpe_pair_counts",
-    "corpus_dedup_rate_by_source", "corpus_vocab_growth", "cte_topn",
-    "cube_sales", "dataset_epoch_interleave", "decontaminate_embedding",
-    "dedup_canonical_docs", "dedup_translation_pairs",
-]
-
-# r14 open (VERDICT r13 item 1): execute the committed machine-checked
-# plan verbatim. CORRECTNESS_r14 gives the 6 r13 additions their driver
-# rows, drains the r6-stale class to zero (28 rows), and retires the
-# alphabetically-first 16 of the 50 r7-checked rows.
-# r15 open: rotate to the committed r15 literal (defined below) —
-# CORRECTNESS_r15 gives driver rows to the 8 r14-added entries plus
-# the oldest stale classes, and — relevantly for this optimization
-# round — to graph_degree_assortativity, corpus_perplexity_buckets,
-# dedup_cluster_size_histogram and dedup_containment, four entries
-# whose internals r14/r15 touched.
-_WINDOW_PRIORITY: list[str] = []  # assigned after _R15_WINDOW_PLAN
+def _driver_rounds() -> dict[int, dict[str, dict]]:
+    """The committed driver results, {round: CORRECTNESS_r<round>.json}."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds: dict[int, dict[str, dict]] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        with open(path) as fh:
+            rounds[int(path.rsplit("_r", 1)[1].removesuffix(".json"))] = json.load(fh)
+    return rounds
 
 
-# The committed r15 window as a MACHINE-CHECKED literal (r14 close),
-# computed from the committed CORRECTNESS_r*.json files with the live
-# r14 window treated as checked-at-14 (script in the r14 transcript;
-# tests/test_entry.py re-derives the composition): FIRST the 8 oracled
-# entries ADDED in r14 (the wave was capped at 8 — olap40/olap41 —
-# so these are the ONLY entries with no driver row once r14 executes),
-# THEN the 34 remaining r7-checked rows (alphabetical; the oldest
-# stale class), THEN the alphabetically-first 8 of the 50 r8-checked
-# rows. 8 + 34 + 8 = 50. r15 opens by assigning
-# _WINDOW_PRIORITY = _R15_WINDOW_PLAN verbatim; the remaining 42 r8
-# rows + rotation debt go to r16.
-_R15_WINDOW_PLAN = [
-    "dt_iso_week_parity", "ev_power_mde", "ev_uplift_qini_buckets",
-    "graph_degree_assortativity", "ml_logrank_test",
-    "q_pareto_frontier_parts", "stats_kruskal_wallis", "stats_levene_bf",
-    "distinct_types", "emb_matryoshka_truncate", "ev_anomaly_zscore",
-    "ev_asof_tolerance", "ev_concurrency_curve", "ev_funnel",
-    "ev_funnel_rates", "ev_retention_cohorts", "ev_session_bounce_rate",
-    "ev_top_paths", "files_bucketed_join", "files_dpp_partitioned_join",
-    "files_parquet_roundtrip", "groupby_all_sales", "join_full_outer",
-    "join_interval_overlap", "join_relational_division",
-    "join_scd2_lookup", "list_lambda_docs", "listagg_nations",
-    "pipeline_decontaminate_report", "pivot_multi_agg",
-    "rollup_share_of_parent", "select_exclude_replace",
-    "setops_not_in_null_semantics", "str_format_parity",
-    "text_gopher_filters", "ts_gapfill_interpolate", "ts_seasonal_naive",
-    "vocab_coverage_rate", "win_gaps_islands", "win_lead_lag",
-    "win_pareto_abc", "win_sliding_median",
-    "agg_entropy_bits", "agg_weighted_avg", "agg_winsorized_trimmed",
-    "corpus_perplexity_buckets", "cte_reused_aggregate",
-    "dataset_split_train_valid", "dedup_cluster_size_histogram",
-    "dedup_containment",
-]
+def _last_green(
+    oracled: Iterable[str], rounds: dict[int, dict[str, dict]], rewritten: dict[str, int] = _REWRITTEN
+) -> dict[str, int]:
+    """Round of each entry's last green driver row, 0 when it is
+    unchecked: never hashed, red in its latest row, or rewritten since."""
+    green: dict[str, int] = {}
+    for rnd in sorted(rounds):
+        for key, row in rounds[rnd].items():
+            ok = row["rows_match"] and row["hash_match"] and rnd >= rewritten.get(key, 0)
+            green[key] = rnd if ok else 0
+    return {k: green.get(k, 0) for k in oracled}
 
-_WINDOW_PRIORITY = list(_R15_WINDOW_PLAN)
+
+def _driver_window(
+    oracled: Iterable[str], rounds: dict[int, dict[str, dict]], rewritten: dict[str, int] = _REWRITTEN
+) -> list[str]:
+    """The oracled entries the driver hashes next: least recently
+    checked first, ties alphabetical."""
+    green = _last_green(oracled, rounds, rewritten)
+    return sorted(green, key=lambda k: (green[k], k))[:_WINDOW]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -362,7 +174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     every.update(QUERIES)
     oracles = oracle_sql()
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for key in _WINDOW_PRIORITY:  # the 50 the driver will hash
+    for key in _driver_window(oracles, _driver_rounds()):  # the ones the driver hashes
         out[key] = every[key]
     for key, fn in every.items():  # remaining oracled (rotated out this round)
         if key not in out and key in oracles:

@@ -21,6 +21,7 @@ Arrow-batched signature computation.
 
 from __future__ import annotations
 
+import os
 import zlib
 
 import numpy as np
@@ -32,7 +33,7 @@ from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
 from duckdb_sudan__spark.operators.text import SQL_BOW_FP, bow_fingerprint_expr
-from duckdb_sudan__spark.session import load_table, local_frame
+from duckdb_sudan__spark.session import SCRATCH_ROOT, load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # dedup_exact — hash-groupBy exact dedup on content fingerprint
@@ -492,7 +493,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 INCR_SHARD_MOD = 10  # doc_id % 10 == 0 → the "new shard" (10% increment)
-_INDEX_ROOT = "/root/repo/tmp/minhash_index"
+_INDEX_ROOT = os.path.join(SCRATCH_ROOT, "minhash_index")
 
 
 def _index_cache_dir(sf_dir: str) -> str:
@@ -501,7 +502,6 @@ def _index_cache_dir(sf_dir: str) -> str:
     a basename (two checkouts each with an sf0.1) must not share an
     index and thrash rebuilds via the mtime fingerprint (ADVICE r6)."""
     import hashlib
-    import os
 
     norm = os.path.normpath(os.path.abspath(sf_dir))
     return os.path.join(
@@ -523,7 +523,6 @@ def build_minhash_index(spark: SparkSession, sf_dir: str, out_dir: str | None = 
     is renamed into place, so a concurrent same-sf reader sees either
     the complete old index, the complete new one, or no dir (rebuild);
     never a half-rebuilt index."""
-    import os
     import shutil
 
     out_dir = out_dir or _index_cache_dir(sf_dir)
@@ -580,7 +579,6 @@ def build_minhash_index(spark: SparkSession, sf_dir: str, out_dir: str | None = 
 
 
 def _read_index_manifest(index_dir: str) -> list[str]:
-    import os
 
     manifest = os.path.join(index_dir, "_deltas")
     if not os.path.exists(manifest):
@@ -592,7 +590,6 @@ def _read_index_manifest(index_dir: str) -> list[str]:
 def _commit_index_delta(index_dir: str, delta_name: str) -> None:
     """Append delta_name to the manifest via write-tmp-then-rename —
     the only mutation a reader can ever observe, and it is atomic."""
-    import os
 
     names = _read_index_manifest(index_dir)
     if delta_name not in names:
@@ -607,7 +604,6 @@ def _commit_index_delta(index_dir: str, delta_name: str) -> None:
 def read_minhash_index(spark: SparkSession, index_dir: str):
     """(sigs, banded) for the base index plus every COMMITTED delta.
     Uncommitted delta dirs (crash window) are invisible by design."""
-    import os
 
     parts = [""] + _read_index_manifest(index_dir)
     sig_paths = [os.path.join(index_dir, p, "sigs.parquet") for p in parts]
@@ -662,7 +658,6 @@ def incremental_dedup_foreach_batch(index_dir: str, pairs_dir: str):
     anywhere replay-safe: an uncommitted delta is invisible, so the
     replayed batch recomputes identical pairs (overwrite) and commits
     exactly once."""
-    import os
     import shutil
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -720,7 +715,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket sizes. This is the production-correct direction: an ingest
     step must not miss corpus duplicates to save cost the shard bound
     already caps."""
-    import os
 
     idx = build_minhash_index(spark, sf_dir)
     corpus_sigs = spark.read.parquet(os.path.join(idx, "sigs.parquet"))

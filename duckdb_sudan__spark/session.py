@@ -31,6 +31,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# cached stages, roundtrip files and sink results: <checkout>/tmp
+SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tmp")
+
 
 def get_spark(app_name: str = "duckdb_sudan__spark", shuffle_partitions: int | None = None) -> SparkSession:
     # must precede JVM launch: worker processes inherit $PYTHONPATH

@@ -14,7 +14,11 @@ made explicit instead of hidden:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+
+from duckdb_sudan__spark.session import SCRATCH_ROOT
 
 
 def sf_cache_key(sf_dir: str) -> str:
@@ -26,7 +30,6 @@ def sf_cache_key(sf_dir: str) -> str:
     The oracle globs keep matching: their sf path component is `*` and
     the corpus_n row discriminator isolates each dataset's rows."""
     import hashlib
-    import os
 
     norm = os.path.normpath(os.path.abspath(sf_dir))
     return f"{os.path.basename(norm)}-{hashlib.md5(norm.encode()).hexdigest()[:8]}"
@@ -46,7 +49,6 @@ def _prune_stale_siblings(root: str, sf_base: str) -> None:
     live testdata tree mid-run is outside the concurrency contract
     (distinct SFs, the supported case, have distinct basenames and are
     never pruned)."""
-    import os
     import shutil
 
     base = sf_base.rsplit("-", 1)[0]
@@ -81,7 +83,6 @@ def _swap_staging(staging: str, final: str, marker: str, fingerprint: str) -> No
     EXISTING marker could carry a stale fingerprint from an old-corpus
     winner — that must re-raise, not silently serve stale files).
     Anything else re-raises."""
-    import os
     import shutil
 
     try:
@@ -174,7 +175,7 @@ def write_bucketed_table(
 # deleted while another harness might be reading.
 # ---------------------------------------------------------------------------
 
-_RT_ROOT = "/root/repo/tmp/roundtrip"
+_RT_ROOT = os.path.join(SCRATCH_ROOT, "roundtrip")
 
 CSV_ROUNDTRIP_ORACLE = f"""
 SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -222,7 +223,6 @@ def _roundtrip_write(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     build into <fmt>.staging-<pid>, stamp a fingerprint marker, rename
     into place; a current marker skips the build so steady-state runs
     never delete files another harness may be mid-read on."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -366,7 +366,7 @@ _register_roundtrips()
 # plan shape does, and plan tests pin that separately).
 # ---------------------------------------------------------------------------
 
-_DPP_ROOT = "/root/repo/tmp/dpp"
+_DPP_ROOT = os.path.join(SCRATCH_ROOT, "dpp")
 
 DPP_ORACLE = """
 WITH f AS (
@@ -391,7 +391,6 @@ def _stage_events_by_day(spark: SparkSession, sf_dir: str) -> str:
     tmp/dpp/<sf-basename> — the layout a 100 TB event store actually
     uses. Marker-fingerprinted + staging-renamed exactly like the
     roundtrip writes (atomic, skip-if-current)."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -566,7 +565,6 @@ def _schema_evo_write(spark: SparkSession, sf_dir: str) -> str:
     """Stage the two-generation layout: gen1 = even doc_ids WITHOUT
     n_chars (the historical schema), gen2 = odd doc_ids WITH n_chars.
     Atomic staging + fingerprint marker, mirroring _roundtrip_write."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -665,7 +663,6 @@ def _compact_write(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     staging + rename discipline as _roundtrip_write: concurrent
     same-sf builds converge on byte-equivalent output."""
     import math
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -884,14 +881,13 @@ GROUP BY version, lang
 ORDER BY version, lang
 """
 
-_SNAP_ROOT = "/root/repo/tmp/snapshots"
+_SNAP_ROOT = os.path.join(SCRATCH_ROOT, "snapshots")
 
 
 def _snapshot_write(spark: SparkSession, sf_dir: str) -> str:
     """Stage the immutable files + JSON manifests (atomic staging +
     fingerprint marker, the _schema_evo_write discipline)."""
     import json
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -935,7 +931,6 @@ def read_snapshot(spark: SparkSession, table_root: str, version: int):
     """Time-travel read: resolve the manifest, read exactly its file
     list. The whole mechanism — the rest is ordinary parquet."""
     import json
-    import os
 
     with open(os.path.join(table_root, f"manifest_v{version}.json")) as fh:
         m = json.load(fh)
@@ -989,7 +984,7 @@ _register_snapshots()
 # (CASE on lang) — so a static-overwrite regression (all partitions
 # wiped) or a leaky dynamic write (en rows doubled) both hash-diverge.
 
-_DYNOVER_ROOT = "/root/repo/tmp/dynover"
+_DYNOVER_ROOT = os.path.join(SCRATCH_ROOT, "dynover")
 
 DYNOVER_ORACLE = """
 WITH expected AS (
@@ -1012,7 +1007,6 @@ def _dynover_write(spark: SparkSession, sf_dir: str) -> str:
     Step 2: dynamic overwrite of ONLY the en partition with
     transformed rows (doc_id+1e6, n_chars+7). The session conf is
     restored in a finally — entries must not leak config."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -1114,7 +1108,6 @@ ORDER BY seg
 def _bucketed_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders/customer as bucketed catalog tables (per-sf table
     names, mtime-fingerprint cached) and return their names."""
-    import os
 
     sf_base = sf_cache_key(sf_dir).replace(".", "_").replace("-", "_")
     t_orders, t_customer = f"bkt_orders_{sf_base}", f"bkt_customer_{sf_base}"
@@ -1123,8 +1116,7 @@ def _bucketed_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # v2: external-location tables (r13) — the bump forces one clean
     # rebuild off the legacy managed-table layout
     fingerprint = f"v2:{_BUCKETS}:{os.path.getmtime(src_o)}:{os.path.getmtime(src_c)}"
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    marker_dir = os.path.join(repo_root, "tmp", "bucketed")
+    marker_dir = os.path.join(SCRATCH_ROOT, "bucketed")
     os.makedirs(marker_dir, exist_ok=True)
     marker = os.path.join(marker_dir, f"{sf_base}_ok")
     # r12 advice + r13 review: the stage mutates shared state — an

@@ -31,10 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_sudan__spark.operators import register
+from duckdb_sudan__spark.session import SCRATCH_ROOT
 from duckdb_sudan__spark.sources.files import _swap_staging, sf_cache_key
 from duckdb_sudan__spark.streaming.events import drain, events_stream
 
-_SINK_ROOT = "/root/repo/tmp/sinks"
+_SINK_ROOT = os.path.join(SCRATCH_ROOT, "sinks")
 
 
 def _persist_result(df: DataFrame, sf_dir: str, name: str, fingerprint: str,

@@ -129,3 +129,21 @@ def test_steal_sec_reads_proc_stat(bench):
     a = bench._steal_sec()
     b = bench._steal_sec()
     assert a >= 0.0 and b >= a
+
+
+def test_only_bench_and_perfbench_read_proc_stat():
+    # one steal reader: bench._steal_sec (perfbench/measure.py imports it)
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    opens = re.compile(r"""open\(\s*["']/proc/stat""")
+    found = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".") and d not in ("tmp", "perfbench")]
+        for name in filenames:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".py") and path != os.path.join(root, "bench.py"):
+                with open(path, encoding="utf-8") as fh:
+                    if opens.search(fh.read()):
+                        found.append(os.path.relpath(path, root))
+    assert not found, found

@@ -52,134 +52,37 @@ def test_correctness_window_is_full_and_oracled():
     assert set(oracles) <= set(keys)
 
 
-def test_r13_window_plan_was_executed():
-    """History pin: the committed r13 plan matches CORRECTNESS_r13.json
-    key-for-key AND in order (the driver executed the committed plan
-    verbatim), all 50 green — the invariant future window math builds
-    on."""
-    import json
+def test_window_ranks_committed_driver_rows():
+    """The window is computed from the committed CORRECTNESS files:
+    unchecked entries lead, then the oldest last-green round first
+    (ties alphabetical), nothing left out is older than the window's
+    tail, and nothing the newest driver run hashed is hashed again."""
+    rounds = entry_mod._driver_rounds()
+    green = entry_mod._last_green(ALL_ORACLES, rounds)
+    window = list(ALL_QUERIES)[:50]
+    unchecked = sorted(k for k, r in green.items() if r == 0)
+    assert window[: len(unchecked)] == unchecked[:50]
+    ranks = [(green[k], k) for k in window]
+    assert ranks == sorted(ranks)
+    left_out = [k for k in ALL_ORACLES if k not in window]
+    assert all(green[k] >= green[window[-1]] for k in left_out)
+    assert not set(window) & set(rounds[max(rounds)])
 
-    import __spark_entry__ as E
 
-    got = json.load(open("CORRECTNESS_r13.json"))
-    assert list(got) == E._R13_WINDOW_PLAN
+def test_window_puts_unchecked_entries_first():
+    green, red = {"rows_match": True, "hash_match": True}, {"rows_match": True, "hash_match": False}
+    rounds = {
+        1: {"stale": green, "red_now": green, "rewritten": green, "fresh": green},
+        2: {"red_now": red, "fresh": green},
+        3: {"fresh": green},
+    }
+    oracled = ["fresh", "stale", "red_now", "rewritten", "never_seen"]
+    got = entry_mod._driver_window(oracled, rounds, rewritten={"rewritten": 2})
+    assert got == ["never_seen", "red_now", "rewritten", "stale", "fresh"]
+
+
+@pytest.mark.parametrize("rnd", [13, 14, 15])
+def test_committed_driver_rows_are_green(rnd):
+    got = entry_mod._driver_rounds()[rnd]
     bad = [k for k, v in got.items() if not (v["rows_match"] and v["hash_match"])]
-    assert not bad, f"r13 driver rows not green: {bad}"
-
-
-def test_r14_window_plan_executed_verbatim():
-    """r14 open (VERDICT r13 item 1): the live window must BE the
-    committed machine-checked r14 plan — 50 unique names, every one a
-    registered ORACLED entry, zero overlap with the executed r13 window
-    (a rotation, not a repeat), led by exactly the entries no committed
-    driver CORRECTNESS file has hashed (the 6 r13 additions), then the
-    oldest stale classes oldest-first (machine-derived, not
-    hand-claimed)."""
-    import glob
-    import json
-
-    import __spark_entry__ as E
-
-    plan = E._R14_WINDOW_PLAN
-    oracles = E.oracle_sql()
-    queries = E.queries()
-    # r15 rotation: the LIVE window moved to _R15_WINDOW_PLAN (asserted
-    # in test_r15_window_plan_is_valid); the r14 plan's execution is now
-    # history — pin it against the driver's CORRECTNESS_r14.json the way
-    # test_r13_window_plan_was_executed pins r13.
-    import json as _json
-
-    got = _json.load(open("CORRECTNESS_r14.json"))
-    assert list(got) == plan, "driver did not execute the committed r14 plan verbatim"
-    bad = [k for k, v in got.items() if not (v["rows_match"] and v["hash_match"])]
-    assert not bad, f"r14 driver rows not green: {bad}"
-    assert len(plan) == 50 and len(set(plan)) == 50
-    missing_q = [k for k in plan if k not in queries]
-    missing_o = [k for k in plan if k not in oracles]
-    assert not missing_q, f"r14 plan names unregistered entries: {missing_q}"
-    assert not missing_o, f"r14 plan names rows-only entries: {missing_o}"
-    assert not set(plan) & set(E._R13_WINDOW_PLAN), "r14 plan repeats the r13 window"
-    # recompute the composition from the committed driver files
-    # (CORRECTNESS_r13 is on disk now, so no live-window special case):
-    # the leading block must be exactly the never-driver-checked oracled
-    # entries, and the tail must drain oldest-first.
-    latest: dict[str, int] = {}
-    for path in glob.glob("CORRECTNESS_r*.json"):
-        rnd = int(path.split("_r")[1].split(".")[0])
-        if rnd >= 14:
-            continue  # r14's own JSON lands when the driver runs
-        for k in json.load(open(path)):
-            latest[k] = max(latest.get(k, 0), rnd)
-    never = sorted(k for k in oracles if k not in latest)
-    # entries registered AFTER the plan froze (the r14 wave) are also
-    # never-checked but cannot be in the literal — they lead the r15
-    # plan instead (test_r15_window_plan_is_valid asserts that).
-    never_in_plan = [k for k in never if k in set(plan)]
-    assert plan[: len(never_in_plan)] == never_in_plan, (
-        f"r14 plan must lead with the never-checked entries {never_in_plan}"
-    )
-    fill = plan[len(never_in_plan):]
-    fill_rounds = [latest[k] for k in fill]
-    assert fill_rounds == sorted(fill_rounds), "r14 fill must drain oldest-first"
-    oldest = min(r for k, r in latest.items() if k in oracles)
-    stale_oldest = sorted(k for k, r in latest.items() if r == oldest and k in oracles)
-    n_old = min(len(stale_oldest), len(fill))
-    assert fill[:n_old] == stale_oldest[:n_old], (
-        "r14 fill must take the oldest class alphabetically"
-    )
-
-
-def test_r15_window_plan_is_valid():
-    """The committed r15 window literal must be executable as-is at r15
-    open: 50 unique registered ORACLED entries, zero overlap with the
-    live r14 window (a rotation, not a repeat), led by exactly the
-    entries NO committed driver CORRECTNESS file (r14 included, once it
-    lands) will have hashed — the r14 wave — then the oldest stale
-    classes oldest-first (machine-derived, not hand-claimed). The r15
-    plan's execution is history too: pinned against the driver's
-    CORRECTNESS_r15.json the way the r14 test pins r14."""
-    import glob
-    import json
-
-    import __spark_entry__ as E
-
-    plan = E._R15_WINDOW_PLAN
-    oracles = E.oracle_sql()
-    queries = E.queries()
-    assert E._WINDOW_PRIORITY == plan, "r15 window differs from the committed plan"
-    got = json.load(open("CORRECTNESS_r15.json"))
-    assert list(got) == plan, "driver did not execute the committed r15 plan verbatim"
-    bad = [k for k, v in got.items() if not (v["rows_match"] and v["hash_match"])]
-    assert not bad, f"r15 driver rows not green: {bad}"
-    assert len(plan) == 50 and len(set(plan)) == 50
-    missing_q = [k for k in plan if k not in queries]
-    missing_o = [k for k in plan if k not in oracles]
-    assert not missing_q, f"r15 plan names unregistered entries: {missing_q}"
-    assert not missing_o, f"r15 plan names rows-only entries: {missing_o}"
-    assert not set(plan) & set(E._R14_WINDOW_PLAN), "r15 plan repeats the r14 window"
-    # recompute the composition from the committed driver files,
-    # treating the live r14 window as checked (its JSON lands when the
-    # driver runs): the leading block must be exactly the
-    # never-driver-checked oracled entries, the tail drains oldest-first
-    latest: dict[str, int] = {}
-    for path in glob.glob("CORRECTNESS_r*.json"):
-        rnd = int(path.split("_r")[1].split(".")[0])
-        if rnd >= 15:
-            continue  # r15's own JSON landed after the plan froze
-        for k in json.load(open(path)):
-            latest[k] = max(latest.get(k, 0), rnd)
-    for k in E._R14_WINDOW_PLAN:
-        latest[k] = max(latest.get(k, 0), 14)
-    never = sorted(k for k in oracles if k not in latest)
-    assert plan[: len(never)] == never, (
-        f"r15 plan must lead with the never-checked entries {never}"
-    )
-    fill = plan[len(never):]
-    fill_rounds = [latest[k] for k in fill]
-    assert fill_rounds == sorted(fill_rounds), "r15 fill must drain oldest-first"
-    oldest = min(r for k, r in latest.items() if k in oracles)
-    stale_oldest = sorted(k for k, r in latest.items() if r == oldest and k in oracles)
-    n_old = min(len(stale_oldest), len(fill))
-    assert fill[:n_old] == stale_oldest[:n_old], (
-        "r15 fill must take the oldest class alphabetically"
-    )
+    assert not bad, f"r{rnd} driver rows not green: {bad}"

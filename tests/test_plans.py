@@ -242,6 +242,17 @@ def test_driver_rows_go_through_local_frame():
     assert "createDataFrame(" in inspect.getsource(session.local_frame)
 
 
+def test_package_names_no_checkout_path():
+    """Scratch paths derive from `session.SCRATCH_ROOT`, so a run from
+    another checkout never writes into this one."""
+    import pathlib
+
+    pkg = pathlib.Path(operators.__file__).resolve().parent.parent
+    checkout = str(pkg.parent)
+    named = [py.relative_to(pkg).as_posix() for py in pkg.rglob("*.py") if checkout in py.read_text()]
+    assert not named, named
+
+
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     """The §8 co-location claim, demonstrated: orders and lineitem
     written bucketBy(8, orderkey) join with NO Exchange in the plan —

@@ -10,8 +10,13 @@ comparison statistic is the min over samples whose steal reads quiet,
 so every sample ships its own steal number instead of a block
 average. One untimed warm-up pass per key pays JIT/plan compile.
 
-This is a round-14 optimization tool: it changes no query and writes
-no artifact; bench.py remains the driver-facing benchmark.
+Its last line is a result in perfbench's shape (`<key>.min_s` and
+`<key>.median_s` for each key), so tools/ab.py can pair it against a
+git ref:
+  python tools/ab.py HEAD~1 --pairs 5 -- python3 tools/ab_bench.py KEY
+
+It changes no query and writes no artifact; bench.py remains the
+driver-facing benchmark.
 """
 
 from __future__ import annotations
@@ -23,15 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _steal_sec() -> float:
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        hz = os.sysconf("SC_CLK_TCK") or 100
-        return int(parts[8]) / hz if len(parts) > 8 else 0.0
-    except (OSError, ValueError, IndexError):
-        return 0.0
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -64,9 +61,6 @@ def main() -> None:
 
     # same staged multi-row-group layout as bench.py so per-query
     # numbers here are comparable with the bench's
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
-
     staged_dir, max_partition_bytes = bench.stage_multi_rowgroup(sf_dir)
     if max_partition_bytes:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
@@ -85,11 +79,11 @@ def main() -> None:
         for run in range(n):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"ab:{key}:{run}")
-            s0 = _steal_sec()
+            s0 = bench._steal_sec()
             t0 = time.perf_counter()
             bench.force(fn(spark, sf_dir))
             wall = time.perf_counter() - t0
-            steal = _steal_sec() - s0
+            steal = bench._steal_sec() - s0
             samples.append(
                 {"sec": round(wall, 3), "steal_cores": round(steal / max(wall, 1e-9), 3)}
             )
@@ -103,7 +97,11 @@ def main() -> None:
             "samples": samples,
         }
         print(json.dumps({key: out[key]}))
-    print(json.dumps({"summary": {k: [v["min"], v["med"], v["quiet_min"]] for k, v in out.items()}}))
+    metrics = {}
+    for k, v in out.items():
+        metrics[f"{k}.min_s"] = {"value": v["min"], "unit": "s"}
+        metrics[f"{k}.median_s"] = {"value": v["med"], "unit": "s"}
+    print(json.dumps({"metrics": metrics}))
     spark.stop()
 
 
